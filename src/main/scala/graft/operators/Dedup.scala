@@ -842,13 +842,37 @@ object Dedup {
     * (pairs alone over-delete: a~b and b~c must not drop both b and c
     * independently of a).
     *
-    * Spark-first: min-label propagation with pointer jumping, as
+    * Sizing: the distinct bidirectional edges are checkpointed once, and
+    * the edge count observed on that job picks the partition count, one
+    * per [[edgesPerPartition]] edges (capped at
+    * spark.sql.shuffle.partitions).
+    *
+    * Integral ids, one partition (under 2M edges): a union-find over
+    * the whole edge table in one task IS the answer. A union always
+    * hangs the larger root under the smaller one, so every set's root
+    * is its minimum id; with every edge in the one partition, every set
+    * is a whole component, and each node's root is its cluster id. The
+    * (node, root) rows are checkpointed and returned: two checkpoints,
+    * no repartition and no propagation rounds.
+    *
+    * Integral ids, several partitions: the same union-find runs per
+    * partition (phase 1), collapsing the structure local to each; its
+    * (node → local min-id root) rows form a star graph with exactly the
+    * original components, so the propagation below runs over stars
+    * instead of raw chains and dense neighborhoods contract before any
+    * round pays a shuffle. Non-integral ids cannot enter the primitive
+    * union-find maps: the distinct ids are numbered, the numbered graph
+    * takes the integral path, and each cluster's min original id
+    * becomes its cluster id.
+    *
+    * Propagation: min-label propagation with pointer jumping, as
     * iterative DataFrame joins. Each round does (a) one-hop neighbor
     * propagation (edges⋈labels, min-aggregate by destination) and
     * (b) path halving — label := min(label, label(label)) via a
-    * self-join of the label table — so convergence is O(log n) rounds
-    * even on a pathological chain, not O(diameter) (the same doubling
-    * that makes small-star/large-star CC practical at web scale). Every
+    * self-join of the label table. The jumps shorten dense and
+    * id-ordered components, but a chain-like component with arbitrary
+    * ids still takes O(diameter) rounds (a 60-node chain up to ~30),
+    * which is why only the per-partition stars come here. Every
     * round's result is `localCheckpoint`ed: iterative plans otherwise
     * accumulate lineage and the driver's plan/codegen work grows without
     * bound (observed: heap exhaustion within a few rounds). The only
@@ -860,95 +884,134 @@ object Dedup {
     *
     * @return (doc_id, cluster_id) for every doc appearing in `pairs`. */
   def duplicateClusters(pairs: DataFrame, aCol: String, bCol: String,
-      maxIters: Int = 25): DataFrame = {
+      maxIters: Int = 25): DataFrame =
+    duplicateClusters(pairs, aCol, bCol, maxIters, edgesPerPartition)
+
+  /** [[duplicateClusters]] with the per-partition edge budget as an
+    * argument, so a spec can reach the multi-partition path on a small
+    * graph. */
+  private[graft] def duplicateClusters(pairs: DataFrame, aCol: String,
+      bCol: String, maxIters: Int, edgeBudget: Long): DataFrame = {
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    import org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint
     val idType = pairs.schema(aCol).dataType
-    val (edges, nEdges) = ccBuildEdges(
+    val (e0, nEdges) = ccDistinctEdges(
       pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
         .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst"))))
+    val nParts = edgePartitions(pairs.sparkSession, nEdges, edgeBudget)
+    def asClusters(df: DataFrame, node: String, label: String) =
+      df.select(col(node).cast(idType).as("doc_id"),
+        col(label).cast(idType).as("cluster_id"))
     idType match {
+      case LongType | IntegerType | ShortType | ByteType if nParts == 1 =>
+        val out = asClusters(ccLocalRoots(e0.coalesce(1)), "node", "lroot")
+          .localCheckpoint()
+        unpersistCheckpoint(e0)
+        out
       case LongType | IntegerType | ShortType | ByteType =>
-        // PHASE 1 — per-partition union-find (executor-side; memory
-        // bounded by the partition's node count, never the graph's):
-        // one pass over each edge partition collapses all structure
-        // LOCAL to it. The emitted (node → local min-id root) rows
-        // form a star graph with exactly the original components —
-        // every node sits one hop from a local hub — so the iterative
-        // rounds run over stars instead of raw chains: on few
-        // partitions the graph is already solved (2 rounds: converge +
-        // detect), and at corpus scale dense neighborhoods contract
-        // before any round pays a shuffle. Self-loop inputs (a
-        // duplicated rep pairing with itself) survive as (n, n) rows,
-        // so singleton components keep their label row.
-        val spark = pairs.sparkSession
-        import spark.implicits._
-        val mapping = edges
-          .select(col("src").cast("long"), col("dst").cast("long"))
-          .as[(Long, Long)]
-          .mapPartitions { it =>
-            val parent = scala.collection.mutable.LongMap.empty[Long]
-            def find(x0: Long): Long = {
-              var x = x0
-              while (parent.getOrElse(x, x) != x) x = parent(x)
-              var y = x0 // path compression
-              while (y != x) { val nxt = parent(y); parent(y) = x; y = nxt }
-              x
-            }
-            it.foreach { case (s, d) =>
-              parent.getOrElseUpdate(s, s)
-              parent.getOrElseUpdate(d, d)
-              val rs = find(s); val rd = find(d)
-              if (rs < rd) parent(rd) = rs
-              else if (rd < rs) parent(rs) = rd
-            }
-            parent.keys.toArray.iterator.map(n => (n, find(n)))
-          }
-          .toDF("node", "lroot")
-        val (starEdges, nStar) = ccBuildEdges(
+        val edges = ccPartition(e0, nParts)
+        val mapping = ccLocalRoots(edges)
+        val (star0, nStar) = ccDistinctEdges(
           mapping.select(col("node").as("src"), col("lroot").as("dst"))
             .unionByName(
               mapping.select(col("lroot").as("src"), col("node").as("dst"))))
-        org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(edges)
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          println(s"CC_CONTRACT edges=$nEdges stars=$nStar")
-        ccPropagate(starEdges, maxIters)
-          .select(col("node").cast(idType).as("doc_id"),
-            col("label").cast(idType).as("cluster_id"))
+        val starEdges = ccPartition(star0,
+          edgePartitions(pairs.sparkSession, nStar, edgeBudget))
+        unpersistCheckpoint(edges)
+        asClusters(ccPropagate(starEdges, maxIters), "node", "label")
       case _ =>
-        // non-integral ids can't enter the primitive union-find maps —
-        // pure pointer-jumping propagation (least/min are type-generic)
-        ccPropagate(edges, maxIters)
-          .select(col("node").as("doc_id"), col("label").as("cluster_id"))
+        // ids the union-find maps cannot hold: number the distinct
+        // nodes, cluster the numbered graph, and give each cluster its
+        // min original id (label propagation alone would need
+        // O(diameter) rounds on a chain)
+        val ids = e0.select(col("src").as("node")).distinct()
+          .withColumn("nid", monotonically_increasing_id())
+          .localCheckpoint() // pins the numbering: the id is not stable
+        val numbered = e0
+          .join(ids.select(col("node").as("src"), col("nid").as("a")), "src")
+          .join(ids.select(col("node").as("dst"), col("nid").as("b")), "dst")
+        val byNid = duplicateClusters(numbered, "a", "b", maxIters, edgeBudget)
+        val out = byNid.join(ids, col("doc_id") === col("nid"))
+          .select(col("node").as("doc_id"), min(col("node")).over(
+            org.apache.spark.sql.expressions.Window
+              .partitionBy(byNid("cluster_id"))).as("cluster_id"))
+          .localCheckpoint()
+        Seq(e0, ids, byNid).foreach(unpersistCheckpoint)
+        out
     }
   }
 
-  /** Distinct + size-partition + checkpoint an edge stream (input must
-    * already contain both directions). The partition COUNT is sized
-    * from the measured edge count (the count rides the first
-    * checkpoint as an observe metric): a fixed
-    * spark.sql.shuffle.partitions would pin EVERY per-round join to
+  /** Edges per partition of the size-partitioned edge tables of
+    * [[duplicateClusters]] and [[Graph]]'s PageRank kernel. */
+  private[graft] val edgesPerPartition = 2000000L
+
+  /** Partition count for an edge table of `nEdges` rows: one per
+    * `budget` edges, at least 1, at most spark.sql.shuffle.partitions.
+    * A fixed shuffle-partition count would pin EVERY per-round join to
     * that task count — hundreds of near-empty tasks per round on a
-    * small graph — while at corpus scale partitions stay size-bound
-    * (~2M edges each) up to the configured shuffle-partition cap.
-    * localCheckpoint preserves the hash partitioning, so the edge
-    * table — the BIG side, constant across rounds — shuffles once
-    * here instead of once per round. */
-  private def ccBuildEdges(bidir: DataFrame): (DataFrame, Long) = {
+    * small graph — while at corpus scale partitions stay size-bound. */
+  private[graft] def edgePartitions(spark: org.apache.spark.sql.SparkSession,
+      nEdges: Long, budget: Long = edgesPerPartition): Int = {
+    val maxParts = spark.sessionState.conf.numShufflePartitions.toLong
+    math.max(1L, math.min(maxParts, nEdges / budget + 1)).toInt
+  }
+
+  /** Distinct + checkpoint an edge stream (input must already contain
+    * both directions); the edge count rides the checkpoint job as an
+    * observe metric. */
+  private def ccDistinctEdges(bidir: DataFrame): (DataFrame, Long) = {
     val obs0 = org.apache.spark.sql.Observation()
     val e0 = bidir.distinct()
       .observe(obs0, count(lit(1)).as("n"))
       .localCheckpoint()
-    val nEdges = obs0.get("n").asInstanceOf[Long]
-    val maxParts =
-      bidir.sparkSession.sessionState.conf.numShufflePartitions.toLong
-    val nParts = math.max(1L, math.min(maxParts, nEdges / 2000000L + 1)).toInt
+    (e0, obs0.get("n").asInstanceOf[Long])
+  }
+
+  /** Hash-partition a [[ccDistinctEdges]] table by `src` into `nParts`
+    * and checkpoint it, freeing the input. localCheckpoint preserves
+    * the hash partitioning, so the edge table — the BIG side, constant
+    * across rounds — shuffles once here instead of once per round. */
+  private def ccPartition(e0: DataFrame, nParts: Int): DataFrame = {
     val edges = e0.repartition(nParts, col("src")).localCheckpoint()
     org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(e0)
-    (edges, nEdges)
+    edges
+  }
+
+  /** Union-find per partition of an integral (src, dst) edge table
+    * (executor-side; memory bounded by the partition's node count):
+    * (node, lroot) for every node of the partition, lroot the min id of
+    * its set among the partition's edges. Self-loop inputs (a
+    * duplicated rep pairing with itself) survive as (n, n) rows, so
+    * singleton components keep their label row. */
+  private def ccLocalRoots(edges: DataFrame): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    edges
+      .select(col("src").cast("long"), col("dst").cast("long"))
+      .as[(Long, Long)]
+      .mapPartitions { it =>
+        val parent = scala.collection.mutable.LongMap.empty[Long]
+        def find(x0: Long): Long = {
+          var x = x0
+          while (parent.getOrElse(x, x) != x) x = parent(x)
+          var y = x0 // path compression
+          while (y != x) { val nxt = parent(y); parent(y) = x; y = nxt }
+          x
+        }
+        it.foreach { case (s, d) =>
+          parent.getOrElseUpdate(s, s)
+          parent.getOrElseUpdate(d, d)
+          val rs = find(s); val rd = find(d)
+          if (rs < rd) parent(rd) = rs
+          else if (rd < rs) parent(rs) = rd
+        }
+        parent.keys.toArray.iterator.map(n => (n, find(n)))
+      }
+      .toDF("node", "lroot")
   }
 
   /** Min-label propagation with pointer jumping over a prepared
-    * ([[ccBuildEdges]]) edge table; returns (node, label) for every
+    * ([[ccPartition]]) edge table; returns (node, label) for every
     * node appearing as `src` (with bidirectional input: every node).
     * Unpersists `edges` before returning; the returned labels are a
     * self-contained checkpoint. */
@@ -993,7 +1056,6 @@ object Dedup {
     var iter = 0
     var changed = true
     while (changed && iter < maxIters) {
-      val tRound = System.nanoTime()
       // ONE round per checkpoint + convergence check. (Measured
       // alternatives at sf0.1: unrolling round(round(_)) per
       // checkpoint halves the job count but the inner round's `hop`
@@ -1009,8 +1071,6 @@ object Dedup {
       org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(labels)
       labels = next
       iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(f"CC_ROUND $iter%d ${(System.nanoTime() - tRound) / 1e9}%.3f s")
     }
     org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(edges)
     // an unconverged exit would silently split one true component into
@@ -1023,7 +1083,6 @@ object Dedup {
         s"duplicateClusters did not converge in $maxIters rounds — " +
           "raise maxIters")
     }
-    if (sys.env.contains("GRAFT_CC_DEBUG")) println(s"CC_ROUNDS $iter")
     labels.select(col("node"), col("label"))
   }
 

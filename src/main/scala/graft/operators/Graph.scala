@@ -113,10 +113,8 @@ object Graph {
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .observe(obs0, count(lit(1)).as("n"))
       .localCheckpoint()
-    val nEdges = obs0.get("n").asInstanceOf[Long]
-    val maxParts =
-      edges.sparkSession.sessionState.conf.numShufflePartitions.toLong
-    val nParts = math.max(1L, math.min(maxParts, nEdges / 2000000L + 1)).toInt
+    val nParts = Dedup.edgePartitions(edges.sparkSession,
+      obs0.get("n").asInstanceOf[Long])
     val e = e0.repartition(nParts, col("src")).localCheckpoint()
     org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(e0)
     val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))

@@ -285,22 +285,30 @@ object Sketches {
     * element i is `CAST(CONV(SUBSTRING(MD5(array_join(slice(w, i+1,
     * k), ' ')), 1, 15), 16, 10) AS BIGINT)`, so `posexplode` yields
     * the identical (pos, gh) rows the interpreted
-    * transform+md5+conv chain produced. Fewer than k tokens → empty
-    * array (callers gate on `size(w) >= k` anyway). */
+    * transform+md5+conv chain produced. A NULL token is skipped, as
+    * `array_join` skips it: the window joins its non-NULL tokens only
+    * (an all-NULL window hashes the empty string). Fewer than k tokens
+    * → empty array (callers gate on `size(w) >= k` anyway). */
   def winHashes(tokens: ArrayData, k: Int): ArrayData = {
     val ntok = tokens.numElements()
     if (ntok < k) return new GenericArrayData(Array.emptyLongArray)
     val md = md5Local.get()
     val toks = new Array[UTF8String](ntok)
     var i = 0
-    while (i < ntok) { toks(i) = tokens.getUTF8String(i); i += 1 }
+    while (i < ntok) {
+      if (!tokens.isNullAt(i)) toks(i) = tokens.getUTF8String(i)
+      i += 1
+    }
     val out = new Array[Long](ntok - k + 1)
     var maxGram = 0
     i = 0
     while (i <= ntok - k) {
       var len = k - 1
       var j = 0
-      while (j < k) { len += toks(i + j).numBytes(); j += 1 }
+      while (j < k) {
+        if (toks(i + j) != null) len += toks(i + j).numBytes()
+        j += 1
+      }
       if (len > maxGram) maxGram = len
       i += 1
     }
@@ -308,13 +316,17 @@ object Sketches {
     i = 0
     while (i <= ntok - k) {
       var pos = 0
+      var first = true
       var j = 0
       while (j < k) {
-        if (j > 0) { buf(pos) = 0x20; pos += 1 }
         val t = toks(i + j)
-        t.writeToMemory(buf,
-          org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + pos)
-        pos += t.numBytes()
+        if (t != null) {
+          if (!first) { buf(pos) = 0x20; pos += 1 }
+          first = false
+          t.writeToMemory(buf,
+            org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + pos)
+          pos += t.numBytes()
+        }
         j += 1
       }
       md.reset()

@@ -489,9 +489,9 @@ class DedupSpec extends SparkSpec {
     assert(!out.exists(_._1 == 12L))
   }
 
-  test("duplicateClusters: local contraction equals pure propagation on string ids") {
-    // the same graph through both code paths: integral ids take the
-    // union-find contraction, string ids the pure pointer-jumping path
+  test("duplicateClusters: string ids give the clusters of the same integral graph") {
+    // the same graph with integral and with string ids: string ids are
+    // numbered first, and each cluster takes its min string id
     val pairsL = Seq((1L, 2L), (2L, 3L), (4L, 5L), (7L, 7L))
       .toDF("doc_a", "doc_b")
     val pairsS = Seq(("1", "2"), ("2", "3"), ("4", "5"), ("7", "7"))
@@ -503,6 +503,14 @@ class DedupSpec extends SparkSpec {
     assert(viaContract == viaPropagate)
     assert(viaContract == Set(("1","1"), ("2","1"), ("3","1"),
       ("4","4"), ("5","4"), ("7","7")))
+    // a 120-node chain over shuffled string ids: pointer-jumping
+    // propagation alone needed more than the default 25 rounds here
+    val ids = new scala.util.Random(3).shuffle((1000 until 1120).toList)
+    val chain = ids.zip(ids.tail).map { case (a, b) => (a.toString, b.toString) }
+    val labels = Dedup.duplicateClusters(chain.toDF("doc_a", "doc_b"),
+        "doc_a", "doc_b")
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(labels == ids.map(i => i.toString -> "1000").toMap)
   }
 
   test("duplicateClusters: contraction is partition-count independent on a long chain") {
@@ -516,6 +524,91 @@ class DedupSpec extends SparkSpec {
     assert(a == b)
     assert(a.forall(_._2 == 1L)) // one component, min id 1
     assert(a.size == 40)
+    // a 20-edge budget splits the 78 directed edges over 4 partitions:
+    // per-partition contraction, star rebuild and propagation rounds
+    val budget = 20L
+    assert(Dedup.edgePartitions(spark, 78L, budget) >= 3)
+    val (multi, multiJobs) = jobsOf(
+      Dedup.duplicateClusters(chain.repartition(13), "doc_a", "doc_b", 25,
+        budget))
+    info(s"$multiJobs Spark jobs over " +
+      s"${Dedup.edgePartitions(spark, 78L, budget)} partitions")
+    assert(multiJobs > maxSinglePartitionJobs) // the propagation rounds ran
+    assert(multi.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == a)
+  }
+
+  /** (result, Spark jobs it ran) of `body`, counted by a listener under
+    * a job group of its own. */
+  private def jobsOf(body: => org.apache.spark.sql.DataFrame) = {
+    val sc = spark.sparkContext
+    val group = s"dedup-spec-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "jobsOf")
+    try {
+      val out = body
+      org.apache.spark.GraftSpecBridge.drainListeners(spark)
+      (out, jobs.get())
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private val maxSinglePartitionJobs = 5
+
+  test("duplicateClusters: a graph in one partition runs at most 5 Spark jobs") {
+    // 300 edges, well under one partition's budget: the union-find over
+    // the single partition is the whole answer, no propagation rounds
+    val rnd = new scala.util.Random(7)
+    val pairs = Seq.fill(300)((rnd.nextInt(400).toLong, rnd.nextInt(400).toLong))
+    val (out, nJobs) = jobsOf(
+      Dedup.duplicateClusters(pairs.toDF("doc_a", "doc_b"), "doc_a", "doc_b"))
+    info(s"$nJobs Spark jobs")
+    assert(nJobs <= maxSinglePartitionJobs, s"$nJobs jobs")
+    val got = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == DedupSpec.components(pairs))
+  }
+
+  test("duplicateClusters: integral ids equal an in-memory union-find and the string-id path") {
+    import org.scalacheck.{Gen, Prop, Test}
+    val id = Gen.choose(0L, 300L)
+    // random edges (self-loops when both ends agree), explicit self-loops,
+    // a long chain over shuffled ids, then duplicates and reversed copies
+    val genPairs = for {
+      random <- Gen.listOf(Gen.zip(id, id))
+      loops <- Gen.listOf(id.map(n => (n, n)))
+      chainIds <- Gen.choose(0, 60).flatMap(Gen.listOfN(_, id))
+      seed <- Gen.long
+    } yield {
+      val base = random ++ loops ++ chainIds.zip(chainIds.drop(1))
+      val rnd = new scala.util.Random(seed)
+      val dups = base.filter(_ => rnd.nextInt(4) == 0)
+      val flipped = base.filter(_ => rnd.nextInt(4) == 0).map(_.swap)
+      rnd.shuffle(base ++ dups ++ flipped)
+    }
+    val prop = Prop.forAllNoShrink(genPairs) { pairs =>
+      val want = DedupSpec.components(pairs)
+      val got = Dedup.duplicateClusters(pairs.toDF("doc_a", "doc_b"),
+          "doc_a", "doc_b")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val viaStrings = Dedup.duplicateClusters(
+          pairs.map { case (a, b) => (f"$a%04d", f"$b%04d") }
+            .toDF("doc_a", "doc_b"), "doc_a", "doc_b")
+        .collect().map(r => r.getString(0).toLong -> r.getString(1).toLong)
+        .toMap
+      got == want && viaStrings == want
+    }
+    val result = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(20).withWorkers(1), prop)
+    assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
   }
 
   test("dedup_eval: hits bound both sides; exact dups are always found") {
@@ -719,5 +812,23 @@ class DedupSpec extends SparkSpec {
         "lang")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(under == reference, "guarded plan changed the result set")
+  }
+}
+
+object DedupSpec {
+  /** In-memory union-find reference: node → min id of its component,
+    * for every node of `pairs`. */
+  def components(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    // keys copied first: an update may resize the map mid-iteration
+    parent.keys.toList.map(n => n -> find(n)).toMap
   }
 }

@@ -121,6 +121,33 @@ class SketchesSpec extends SparkSpec {
     assert(native.toSeq == ref.toSeq)
   }
 
+  test("native window hashes skip NULL tokens as array_join does") {
+    val k = 3
+    val arrays = spark.sql("""SELECT * FROM VALUES
+      (1, array('a', NULL, 'b', 'c', NULL, 'd')),
+      (2, array(NULL, NULL, NULL, 'x', 'y')),
+      (3, array(CAST(NULL AS STRING), NULL, NULL)),
+      (4, array('', NULL, 'ü', 'naïve', '', 'z')),
+      (5, array('solo', NULL))
+      AS t(id, w)""")
+    val ref = arrays.where(size(col("w")) >= k)
+      .select(col("id"), posexplode(expr(
+        s"transform(sequence(0, size(w) - $k), " +
+          s"i -> array_join(slice(w, i + 1, $k), ' '))"))
+        .as(Seq("pos", "gram")))
+      .select(col("id"), col("pos"),
+        expr("CAST(CONV(SUBSTRING(MD5(gram), 1, 15), 16, 10) AS BIGINT)")
+          .as("gh"))
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).sorted
+    val native = arrays.where(size(col("w")) >= k)
+      .select(col("id"),
+        posexplode(GraftFunctions.winHashes(spark, col("w"), k))
+          .as(Seq("pos", "gh")))
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).sorted
+    assert(ref.length == 4 + 3 + 1 + 4)
+    assert(native.toSeq == ref.toSeq)
+  }
+
   test("native hash-embed cells equal the per-token explode + groupBy fold") {
     val docs = Seq(
       ("d1", "the quick brown fox the quick sign flip sign flip"),

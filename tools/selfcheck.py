@@ -7,7 +7,8 @@ run `python3 tools/selfcheck.py [sfDir] [outDir]`.
 For each <name>.parquet in outDir: run oracle_sql.json[name] in DuckDB
 with the sf tables registered as views, sort columns by name, sort rows,
 compare values exactly. Mirrors the driver: hash-mismatch == any cell
-differing after column-name sort.
+differing after column-name sort. Every key that Verify lists in
+_failed.json (it threw) is a failure too, whatever its directory holds.
 """
 import sys, json, glob, os
 import duckdb
@@ -21,9 +22,14 @@ for t in ["region","nation","customer","supplier","part","orders",
     con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
 
 oracle = json.load(open(f"{out}/oracle_sql.json"))
-fails, passes, rows_only = [], [], []
+failed_path = f"{out}/_failed.json"
+threw = json.load(open(failed_path)) if os.path.exists(failed_path) else {}
+fails = [(name, f"Verify failed: {msg}") for name, msg in sorted(threw.items())]
+passes, rows_only = [], []
 for path in sorted(glob.glob(f"{out}/*/")):
     name = os.path.basename(path.rstrip("/"))
+    if name in threw:
+        continue
     got = con.sql(f"SELECT * FROM '{path}*.parquet'").df()
     got = got[sorted(got.columns)]
     if name not in oracle:
