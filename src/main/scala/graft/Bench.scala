@@ -2,6 +2,21 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+/** Standalone streaming-throughput main: runs ONLY [[Bench.streamThroughput]]
+  * on a quiet JVM — nothing else has touched the heap, the page cache, or
+  * the state-store dirs — so the number isolates the E-group harness from
+  * the 249-query bench's neighbor noise (driver-side window tput read
+  * 906k→632k→520k rows/s across r7-r9 on an untouched harness; this main
+  * is the instrument that settles box-factor vs real regression). */
+object BenchStream {
+  def main(args: Array[String]): Unit = {
+    Bench.resetScratch("/tmp/graft_bench_stream")
+    val spark = GraftSession.build(GraftSession.envCpus)
+    println(s"""{"stream_tput":${Bench.streamThroughput(spark)}}""")
+    spark.stop()
+  }
+}
+
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":...,"queries":{...}}.
   *
@@ -12,74 +27,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Catalyst prune the very work being measured (a projection-only query
   * optimizes to a row-count scan).
   */
-/** The bench/profiling session config, shared by [[Bench]] and
-  * [[RunOne]] so single-query A/B runs measure the same engine setup
-  * the driver's bench does. */
-object BenchSession {
-  /** Shuffle/spill scratch directory override (`SPARK_GRAFT_LOCAL_DIR`;
-    * unset = Spark default). An operator knob only — r16 MEASURED both
-    * candidate placements on this box and neither earned a default:
-    * /dev/shm looked attractive (ext4-on-virtio here does ~3 MB/s on
-    * sync-heavy small writes, and event logs showed 10.9s of cumulative
-    * shuffle-write time for 331 KB across one 32-task stage), but a
-    * controlled A/B with scratch AND spark.local.dir on tmpfs made the
-    * txn/stream gates 1.6-2× SLOWER (etl_txn_merge 6.1/4.5s ext4 vs
-    * 12.8/7.4s tmpfs, fresh scratch both sides) — so the default stays
-    * the default, and the knob exists for boxes where fast local disks
-    * actually are faster. */
-  private[graft] def localDir: Option[String] =
-    sys.env.get("SPARK_GRAFT_LOCAL_DIR")
-
-  def build(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-    val spark = localDir.fold(b0)(d => b0.config("spark.local.dir", d))
-      // testdata files are small; cap split size so scans parallelize
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      // coalesce post-shuffle partitions by SIZE, not parallelism:
-      // with the default (true), AQE keeps >= defaultParallelism
-      // near-empty reduce tasks on small shuffles — for iterative
-      // plans (CC label propagation, pageRank: one shuffle-heavy job
-      // per round) the 32x task-scheduling overhead dominates wall
-      // time. False is also the setting Spark's own docs recommend
-      // once advisoryPartitionSize is tuned; at real scale partitions
-      // are size-bound either way, so this only removes toy-scale
-      // latency, it does not change the 100 TB plan shape.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // runtime SMJ→shuffled-hash conversion, SIZE-GATED per partition:
-      // the sanctioned replacement for forced shuffle_hash hints (the
-      // unbounded posting self-joins in Dedup dropped theirs in r12).
-      // AQE converts only when every build partition fits under the
-      // threshold — at test SF the narrow posting tables qualify and
-      // keep the ~2× hash-build win; at 100 TB they exceed it and
-      // sort-merge (spillable) is chosen. 64m = the advisory partition
-      // size, the largest value the conversion rule accepts.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-}
-
-/** Standalone streaming-throughput main: runs ONLY [[Bench.streamThroughput]]
-  * on a quiet JVM — nothing else has touched the heap, the page cache, or
-  * the state-store dirs — so the number isolates the E-group harness from
-  * the 249-query bench's neighbor noise (driver-side window tput read
-  * 906k→632k→520k rows/s across r7-r9 on an untouched harness; this main
-  * is the instrument that settles box-factor vs real regression). */
-object BenchStream {
-  def main(args: Array[String]): Unit = {
-    Bench.resetScratch("/tmp/graft_bench_stream")
-    val spark = BenchSession.build()
-    println(s"""{"stream_tput":${Bench.streamThroughput(spark)}}""")
-    spark.stop()
-  }
-}
-
 object Bench {
   /** Wipe one scratch root with NOFOLLOW semantics: a symlink at the
     * path is removed AS A LINK (never followed — these are fixed names
@@ -90,7 +37,7 @@ object Bench {
     * read. Fails loudly if the path survives cleanup — a silently
     * unwiped root re-creates the 4.7s→22s txn-history accretion bug
     * this wipe exists to prevent. The r16 tmpfs placement experiment
-    * lives in [[BenchSession.localDir]]'s scaladoc — measured slower
+    * lives in [[GraftSession.localDir]]'s scaladoc — measured slower
     * here, so scratch stays a plain /tmp dir. */
   private[graft] def resetScratch(p: String): Unit = {
     val path = java.nio.file.Paths.get(p)
@@ -123,7 +70,7 @@ object Bench {
     // dirs accrete across rounds and the measured scans read mixed-age
     // page-cache state (r8/r9: repeated contamination false alarms).
     Seq("/tmp/graft_rt", "/tmp/graft_bench_stream").foreach(resetScratch)
-    val spark = BenchSession.build()
+    val spark = GraftSession.build(GraftSession.envCpus)
 
     def run(df: DataFrame): Unit = df.queryExecution.toRdd.foreach(_ => ())
 
@@ -164,10 +111,14 @@ object Bench {
     val sampled = ordered.map { case (name, fn) =>
       spark.catalog.clearCache()
       System.gc()
+      var error = "" // the first sample's "ExceptionClass: message"
       val times = (1 to nSamples).flatMap { _ =>
         val t0 = System.nanoTime()
         try { run(fn(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
-        catch { case _: Throwable => None }
+        catch { case e: Throwable =>
+          if (error.isEmpty) error = e.toString
+          None
+        }
       }.sorted
       val value =
         if (times.isEmpty) -1.0
@@ -177,9 +128,9 @@ object Bench {
         // carry the key's value labeled "median" (r15 review)
         else if (contendedRun) times((times.size - 1) / 2)
         else times.head // min
-      (name, value, times)
+      (name, value, times, error)
     }
-    val results = sampled.map { case (name, value, _) => name -> value }
+    val results = sampled.map { case (name, value, _, _) => name -> value }
     // ---- E-group steady-state: rows/sec through streaming pipelines.
     // The per-query numbers above time AvailableNow micro-batch runs over
     // the small sf tables, which is mostly setup cost; this pushes a
@@ -190,10 +141,7 @@ object Bench {
       // same via the -1 sentinel) — an empty object would be
       // indistinguishable from "not applicable"
       case e: Throwable =>
-        // strip quotes, backslashes and ALL control chars — one raw
-        // control byte would invalidate the whole single-line JSON
-        s"""{"error":"${String.valueOf(e.getMessage)
-            .replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(200)}"}"""
+        s"""{"error":"${jsonText(String.valueOf(e.getMessage))}"}"""
     }
 
     // The driver's tail capture keeps only the LAST 2000 chars of stdout;
@@ -223,14 +171,19 @@ object Bench {
     // deltas carry their own noise evidence (r14 verdict #6)
     val spread =
       if (!contendedRun) ""
-      else sampled.collect { case (k, _, ts) if ts.nonEmpty =>
+      else sampled.collect { case (k, _, ts, _) if ts.nonEmpty =>
         "\"" + k + s"""\":[${fmt(ts.head)},${fmt(ts.last)}]"""
       }.mkString(""""spread":{""", ",", "},")
+    // why each failed key failed: BENCH_DETAIL only, the stdout line
+    // keeps its bare "errors" list
+    val failures = sampled.collect { case (k, v, _, err) if v < 0 =>
+      "\"" + k + "\":\"" + jsonText(err) + "\""
+    }.mkString(""""failures":{""", ",", "},")
     val detailPath = "BENCH_DETAIL.json"
     val detailJson =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},""" +
         s""""queries":$detail,$spread"errors":${failed.mkString("[", ",", "]")},""" +
-        s""""stream_tput":$tput,$telemetry,"sf":"$sfDir"}"""
+        s"""$failures"stream_tput":$tput,$telemetry,"sf":"$sfDir"}"""
     try {
       val w = new java.io.PrintWriter(detailPath, "UTF-8")
       try w.println(detailJson) finally w.close()
@@ -255,6 +208,12 @@ object Bench {
       s""""stream_tput":$tput,$telemetry,"sf":"$sfDir","detail":"$detailPath"}""")
     spark.stop()
   }
+
+  /** `s` as the body of a JSON string: quotes, backslashes and ALL
+    * control chars become spaces — one raw control byte would invalidate
+    * the whole single-line JSON — cut to 200 chars. */
+  private def jsonText(s: String): String =
+    s.replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(200)
 
   /** Stage a deterministic 2M-row event stream as 8 parquet files, then
     * run it through windowedCounts and sessionizeStream with

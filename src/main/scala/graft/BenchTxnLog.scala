@@ -19,7 +19,7 @@ object BenchTxnLog {
     val rows = args.lift(1).map(_.toInt).getOrElse(100)
     val root = "/tmp/graft_rt/bench_txnlog"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    val spark = BenchSession.build()
+    val spark = GraftSession.build(GraftSession.envCpus)
     import graft.operators.Txn
     val f = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -24,7 +24,7 @@ object BenchZipf {
   def main(args: Array[String]): Unit = {
     val counts = if (args.nonEmpty) args.toSeq.map(_.toInt)
       else Seq(10000, 20000)
-    val spark = BenchSession.build()
+    val spark = GraftSession.build(GraftSession.envCpus)
 
     def fixture(n: Int): DataFrame = spark.range(n.toLong).select(
       col("id").as("doc_id"), lit("en").as("lang"),

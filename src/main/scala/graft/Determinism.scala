@@ -96,7 +96,7 @@ object DeterminismCheck {
     val subs = args.lift(1).map(_.split(',').map(_.trim).toSeq)
     val keys = SparkEntry.queries.keys.toSeq.sorted
       .filter(k => subs.forall(_.exists(k.contains)))
-    val spark = BenchSession.build()
+    val spark = GraftSession.build(GraftSession.envCpus)
     val bad = Determinism.sweep(spark, keys, sfDir)
     bad.foreach { case (k, a, b) =>
       System.err.println(s"[determinism] $k: $a != $b") }

@@ -28,7 +28,7 @@ object RunOne {
     // 4.7s → 22s across repeated RunOne invocations)
     Seq("/tmp/graft_rt", "/tmp/graft_bench_stream")
       .foreach(Bench.resetScratch)
-    val spark = BenchSession.build()
+    val spark = GraftSession.build(GraftSession.envCpus)
     val fn = SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query '$name'; keys: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}"))
 

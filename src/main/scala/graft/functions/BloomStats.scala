@@ -1,12 +1,12 @@
 package graft.functions
 
+import graft.plans.GraftFunctions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, DoubleType, IntegerType, StringType}
 
 /** Per-file BLOOM FILTER stats for the Txn manifest — the point-key
@@ -222,43 +222,20 @@ final case class BloomMightContain(first: Expression, second: Expression,
     copy(first = a, second = b, third = c)
 }
 
-/** Session registration + Column wrappers (the
-  * [[graft.plans.CosineSimilarity]] convention). */
+/** Column wrappers; the builders live in the
+  * [[graft.plans.GraftFunctions]] table. */
 object BloomStats {
   val AggName = "graft_bloom_agg"
   val ContainsName = "graft_bloom_contains"
 
-  /** Idempotent runtime registration on an existing session. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(AggName, exprs => {
-      require(exprs.length == 3 && exprs(1).foldable && exprs(2).foldable,
-        s"$AggName expects (double, const bits, const hashes)")
-      BloomAgg(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue())
-    }, "built-in")
-    reg.createOrReplaceTempFunction(ContainsName, exprs => {
-      require(exprs.length == 3,
-        s"$ContainsName expects (binary, double, int hashes)")
-      BloomMightContain(exprs.head, exprs(1), exprs(2))
-    }, "built-in")
-  }
-
-  /** Bloom aggregate column (registers on the session). */
+  /** Bloom aggregate column. */
   def agg(spark: SparkSession, value: Column,
       mBits: Int = Bloom.DefaultBits,
-      k: Int = Bloom.DefaultHashes): Column = {
-    register(spark)
-    call_function(AggName, value,
-      org.apache.spark.sql.functions.lit(mBits),
-      org.apache.spark.sql.functions.lit(k))
-  }
+      k: Int = Bloom.DefaultHashes): Column =
+    GraftFunctions.call(AggName, value)(mBits, k)
 
-  /** Membership-probe column (registers on the session). */
+  /** Membership-probe column. */
   def mightContain(spark: SparkSession, bloom: Column, value: Column,
-      k: Column): Column = {
-    register(spark)
-    call_function(ContainsName, bloom, value, k)
-  }
+      k: Column): Column =
+    GraftFunctions.call(ContainsName, bloom, value, k)()
 }

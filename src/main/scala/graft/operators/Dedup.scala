@@ -672,7 +672,7 @@ object Dedup {
     // nothing added) and moves hash-vs-merge to AQE, which decides
     // from RUNTIME sizes: shuffled-hash only when every build
     // partition genuinely fits (maxShuffledHashJoinLocalMapThreshold,
-    // BenchSession/Verify config), spillable sort-merge otherwise.
+    // GraftSession config), spillable sort-merge otherwise.
     val part = guardPostings(posting.repartition(col("gk")), dfBudget,
       "ngramJaccardPairs", "ngramJaccardPairsPrefix")
     def ng(c: Column): Column = c.bitwiseAND(lit((1L << 20) - 1))

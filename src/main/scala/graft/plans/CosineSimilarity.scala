@@ -1,12 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst cosine similarity over two `array<double>` columns.
@@ -131,331 +128,4 @@ final case class DotProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-/** Registration: both the proper `SparkSessionExtensions` path (for
-  * `spark.sql.extensions=graft.plans.GraftExtensions` at session build)
-  * and a runtime path for sessions we didn't build (the driver's). */
-object GraftFunctions {
-  val CosineName = "graft_cosine"
-
-  private def info = new ExpressionInfo(
-    classOf[CosineSimilarity].getName, CosineName)
-
-  private def builder(exprs: Seq[Expression]): Expression = {
-    require(exprs.length == 2, s"$CosineName expects 2 arguments")
-    CosineSimilarity(exprs.head, exprs(1))
-  }
-
-  val MinHashName = "graft_minhash_sig"
-  val SimHashName = "graft_simhash64"
-  val ShinglesName = "graft_shingles"
-  val GramKeysName = "graft_gram_keys"
-  val Md5GramSetName = "graft_md5_gram_set"
-  val WinHashesName = "graft_win_hashes"
-  val HashEmbedCellsName = "graft_hash_embed_cells"
-
-  /** Idempotent runtime registration on an existing session. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(CosineName, builder, "built-in")
-    reg.createOrReplaceTempFunction(MinHashName, exprs => {
-      require(exprs.length == 2 && exprs(1).foldable,
-        s"$MinHashName expects (array<string>, const int)")
-      MinHashSignature(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue())
-    }, "built-in")
-    reg.createOrReplaceTempFunction(SimHashName, exprs => {
-      require(exprs.length == 1, s"$SimHashName expects 1 argument")
-      SimHash64(exprs.head)
-    }, "built-in")
-    reg.createOrReplaceTempFunction(LshName, exprs => {
-      require(exprs.length == 2 && exprs(1).foldable,
-        s"$LshName expects (array<double>, const int)")
-      LshBucket(exprs.head, exprs(1).eval().asInstanceOf[Number].intValue())
-    }, "built-in")
-    reg.createOrReplaceTempFunction(ShinglesName, exprs => {
-      require(exprs.length == 2 && exprs(1).foldable,
-        s"$ShinglesName expects (array<string>, const int)")
-      WordShingles(exprs.head, exprs(1).eval().asInstanceOf[Number].intValue())
-    }, "built-in")
-    reg.createOrReplaceTempFunction(GramKeysName, exprs => {
-      require(exprs.length == 3 && exprs(2).foldable,
-        s"$GramKeysName expects (string, string, const int)")
-      GramKeys(exprs.head, exprs(1),
-        exprs(2).eval().asInstanceOf[Number].intValue())
-    }, "built-in")
-    reg.createOrReplaceTempFunction(Md5GramSetName, exprs => {
-      require(exprs.length == 2 && exprs(1).foldable,
-        s"$Md5GramSetName expects (string, const int)")
-      Md5GramSet(exprs.head, exprs(1).eval().asInstanceOf[Number].intValue())
-    }, "built-in")
-    reg.createOrReplaceTempFunction(WinHashesName, exprs => {
-      require(exprs.length == 2 && exprs(1).foldable,
-        s"$WinHashesName expects (array<string>, const int)")
-      WinHashes(exprs.head, exprs(1).eval().asInstanceOf[Number].intValue())
-    }, "built-in")
-    reg.createOrReplaceTempFunction(HashEmbedCellsName, exprs => {
-      require(exprs.length == 2 && exprs(1).foldable,
-        s"$HashEmbedCellsName expects (string, const int)")
-      HashEmbedCells(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue())
-    }, "built-in")
-    reg.createOrReplaceTempFunction(VecDigestName, exprs => {
-      require(exprs.length == 1, s"$VecDigestName expects 1 argument")
-      VecDigest(exprs.head)
-    }, "built-in")
-    reg.createOrReplaceTempFunction(PHashName, exprs => {
-      require(exprs.length == 1, s"$PHashName expects 1 argument")
-      PHash60(exprs.head)
-    }, "built-in")
-    reg.createOrReplaceTempFunction(DHashName, exprs => {
-      require(exprs.length == 1, s"$DHashName expects 1 argument")
-      DHash60(exprs.head)
-    }, "built-in")
-    reg.createOrReplaceTempFunction(GrayDecodeName, exprs => {
-      require(exprs.length == 1, s"$GrayDecodeName expects 1 argument")
-      GrayDecode(exprs.head)
-    }, "built-in")
-    reg.createOrReplaceTempFunction(PpmEncodeName, exprs => {
-      require(exprs.length == 1, s"$PpmEncodeName expects 1 argument")
-      PpmEncode(exprs.head)
-    }, "built-in")
-    reg.createOrReplaceTempFunction(BmpEncodeName, exprs => {
-      require(exprs.length == 1, s"$BmpEncodeName expects 1 argument")
-      BmpEncode(exprs.head)
-    }, "built-in")
-    reg.createOrReplaceTempFunction(JpegEncodeName, exprs => {
-      require(exprs.length == 1, s"$JpegEncodeName expects 1 argument")
-      JpegEncode(exprs.head)
-    }, "built-in")
-    reg.createOrReplaceTempFunction(DotName, exprs => {
-      require(exprs.length == 2, s"$DotName expects 2 arguments")
-      DotProduct(exprs.head, exprs(1))
-    }, "built-in")
-    reg.createOrReplaceTempFunction(NgramScoreName, exprs => {
-      require(exprs.length == 2 && exprs(1).foldable,
-        s"$NgramScoreName expects (string, const array<bigint>)")
-      val w = exprs(1).eval().asInstanceOf[ArrayData].toLongArray().toSeq
-      NgramScore(exprs.head, w)
-    }, "built-in")
-    reg.createOrReplaceTempFunction(AudioFpName, exprs => {
-      require(exprs.length == 5 && exprs.tail.forall(_.foldable),
-        s"$AudioFpName expects (binary, 4 const ints)")
-      val Seq(fb, fo, dt, qd) = exprs.tail.map(
-        _.eval().asInstanceOf[Number].intValue())
-      AudioFp(exprs.head, fb, fo, dt, qd)
-    }, "built-in")
-    reg.createOrReplaceTempFunction(GramAggName, exprs => {
-      require(exprs.length == 1, s"$GramAggName expects 1 argument")
-      GramAgg(exprs.head).toAggregateExpression()
-    }, "built-in")
-    reg.createOrReplaceTempFunction(CharEntropyName, exprs => {
-      require(exprs.length == 1, s"$CharEntropyName expects 1 argument")
-      CharEntropyStats(exprs.head)
-    }, "built-in")
-  }
-
-  val DotName = "graft_dot"
-
-  /** Native dot product (registers on the session). */
-  def dot(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function(DotName, a, b)
-  }
-
-  val PHashName = "graft_phash60"
-  val DHashName = "graft_dhash60"
-
-  /** Native 60-bit average-hash over a binary column. */
-  def phash60(spark: SparkSession, payload: Column): Column = {
-    register(spark)
-    call_function(PHashName, payload)
-  }
-
-  /** Native 60-bit difference-hash over a binary column. */
-  def dhash60(spark: SparkSession, payload: Column): Column = {
-    register(spark)
-    call_function(DHashName, payload)
-  }
-
-  val GrayDecodeName = "graft_gray_decode"
-  val PpmEncodeName = "graft_ppm_encode"
-
-  /** Native image decode: PPM/BMP container → gray pixels, other
-    * payloads pass through unchanged (registers on the session). */
-  def grayDecode(spark: SparkSession, payload: Column): Column = {
-    register(spark)
-    call_function(GrayDecodeName, payload)
-  }
-
-  /** Native gray-buffer → binary P6 PPM encode (registers on the
-    * session). */
-  def ppmEncode(spark: SparkSession, gray: Column): Column = {
-    register(spark)
-    call_function(PpmEncodeName, gray)
-  }
-
-  val BmpEncodeName = "graft_bmp_encode"
-
-  val JpegEncodeName = "graft_jpeg_encode"
-
-  /** Native gray-buffer → binary 24-bit BMP encode (registers on the
-    * session). */
-  def bmpEncode(spark: SparkSession, gray: Column): Column = {
-    register(spark)
-    call_function(BmpEncodeName, gray)
-  }
-
-  /** Native gray-buffer → baseline grayscale JPEG encode (registers
-    * on the session). */
-  def jpegEncode(spark: SparkSession, gray: Column): Column = {
-    register(spark)
-    call_function(JpegEncodeName, gray)
-  }
-
-  val VecDigestName = "graft_vec_digest"
-
-  /** Native packed-bytes vector value digest (registers on the session). */
-  def vecDigest(spark: SparkSession, vec: Column): Column = {
-    register(spark)
-    call_function(VecDigestName, vec.cast("array<double>"))
-  }
-
-  val LshName = "graft_lsh_bucket"
-
-  /** Native hyperplane-LSH bucket column (registers on the session). */
-  def lshBucket(spark: SparkSession, vec: Column, planes: Int = 16): Column = {
-    register(spark)
-    call_function(LshName, vec.cast("array<double>"),
-      org.apache.spark.sql.functions.lit(planes))
-  }
-
-  val AudioFpName = "graft_audio_fp"
-
-  /** Native landmark audio fingerprints: binary → array<bigint>
-    * (registers on the session). */
-  def audioFp(spark: SparkSession, payload: Column, frameBytes: Int,
-      fanout: Int, maxDt: Int, qDiv: Int): Column = {
-    register(spark)
-    call_function(AudioFpName, payload,
-      org.apache.spark.sql.functions.lit(frameBytes),
-      org.apache.spark.sql.functions.lit(fanout),
-      org.apache.spark.sql.functions.lit(maxDt),
-      org.apache.spark.sql.functions.lit(qDiv))
-  }
-
-  val NgramScoreName = "graft_ngram_score"
-
-  /** Native hashed-trigram linear-model score: string →
-    * array<bigint> [score_milli, n_grams] (registers on the session).
-    * `weights` is the model — a milli-unit integer weight per hash
-    * bucket, shipped into the plan as a constant (at cluster scale a
-    * broadcast-sized array, 8·|w| bytes). */
-  def ngramScore(spark: SparkSession, text: Column, weights: Seq[Long]): Column = {
-    register(spark)
-    call_function(NgramScoreName, text,
-      org.apache.spark.sql.functions.lit(weights.toArray))
-  }
-
-  /** Native distinct word k-grams column (registers on the session). */
-  def shingles(spark: SparkSession, tokens: Column, k: Int): Column = {
-    register(spark)
-    call_function(ShinglesName, tokens, org.apache.spark.sql.functions.lit(k))
-  }
-
-  /** Native fused posting-key column for the plain inverted-index
-    * dedup forms (registers on the session): per row, the distinct
-    * word k-grams of `text` hashed with the group column folded in —
-    * array<bigint> of xxhash64("grp|gram"), value-identical to
-    * `xxhash64(concat_ws("|", grp, gram))` over exploded
-    * `graft_shingles(tokens(text), k)` (see [[Sketches.gramKeys]]).
-    * The NULL-group fold mirrors concat_ws, which SKIPS nulls. */
-  def gramKeys(spark: SparkSession, grp: Column, text: Column, k: Int): Column = {
-    register(spark)
-    val prefix = org.apache.spark.sql.functions.when(grp.isNull,
-        org.apache.spark.sql.functions.lit(""))
-      .otherwise(org.apache.spark.sql.functions.concat(
-        grp.cast("string"), org.apache.spark.sql.functions.lit("|")))
-    call_function(GramKeysName, prefix, text,
-      org.apache.spark.sql.functions.lit(k))
-  }
-
-  /** Native distinct md5 word n-gram digests (registers on the
-    * session); see [[Sketches.md5GramSet]]. */
-  def md5GramSet(spark: SparkSession, text: Column, n: Int): Column = {
-    register(spark)
-    call_function(Md5GramSetName, text,
-      org.apache.spark.sql.functions.lit(n))
-  }
-
-  /** Native 60-bit md5 window hashes in position order (registers on
-    * the session); see [[Sketches.winHashes]]. */
-  def winHashes(spark: SparkSession, tokens: Column, k: Int): Column = {
-    register(spark)
-    call_function(WinHashesName, tokens,
-      org.apache.spark.sql.functions.lit(k))
-  }
-
-  /** Native row-local feature-hash cells (registers on the session);
-    * see [[Sketches.hashEmbedCells]]. */
-  def hashEmbedCells(spark: SparkSession, text: Column, dim: Int): Column = {
-    register(spark)
-    call_function(HashEmbedCellsName, text,
-      org.apache.spark.sql.functions.lit(dim))
-  }
-
-  /** Native minhash signature column (registers on the session). */
-  def minhashSig(spark: SparkSession, shingles: Column, perms: Int): Column = {
-    register(spark)
-    call_function(MinHashName, shingles, org.apache.spark.sql.functions.lit(perms))
-  }
-
-  /** Native simhash column (registers on the session). */
-  def simhash64(spark: SparkSession, tokens: Column): Column = {
-    register(spark)
-    call_function(SimHashName, tokens)
-  }
-
-  /** Column API: fused native cosine (registers on the active session).
-    * No implicit coercion on the raw expression, so cast here — a no-op
-    * when the input is already array<double>. */
-  def cosine(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function(CosineName, a.cast("array<double>"), b.cast("array<double>"))
-  }
-
-  val GramAggName = "graft_gram_agg"
-
-  /** Native one-pass Gram-triangle aggregate (registers on the
-    * session): array<double> vectors → one array<struct<i,j,n,s>> of
-    * d(d+1)/2 cells. See [[GramAgg]] for the exactness contract. */
-  def gramAgg(spark: SparkSession, vec: Column): Column = {
-    register(spark)
-    call_function(GramAggName, vec.cast("array<double>"))
-  }
-
-  val CharEntropyName = "graft_char_entropy"
-
-  /** Native row-local char-entropy statistics (registers on the
-    * session): string → struct<n, nd, s> — see
-    * [[Sketches.charEntropyStats]] for the exactness contract. */
-  def charEntropyStats(spark: SparkSession, text: Column): Column = {
-    register(spark)
-    call_function(CharEntropyName, text)
-  }
-}
-
-/** `spark.sql.extensions` entry point: native functions + the
-  * TopKPerKey planner strategy. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.CosineName),
-      new ExpressionInfo(classOf[CosineSimilarity].getName,
-        GraftFunctions.CosineName),
-      exprs => CosineSimilarity(exprs.head, exprs(1))))
-    ext.injectPlannerStrategy(_ => TopKPerKeyStrategy)
-    ext.injectOptimizerRule(_ => TopKRewriteRule)
-  }
 }

@@ -132,44 +132,26 @@ object Sketches {
     * posting key needs); fewer than k tokens → empty array. */
   def gramKeys(keyPrefix: UTF8String, text: UTF8String, k: Int): ArrayData = {
     val bytes = text.toLowerCase.getBytes
-    val n = bytes.length
-    // tokenize: spans of non-0x20 bytes
-    var cap = 32
-    var starts = new Array[Int](cap)
-    var ends = new Array[Int](cap)
-    var ntok = 0
-    var i = 0
-    while (i < n) {
-      if (bytes(i) == 0x20) i += 1
-      else {
-        val s = i
-        while (i < n && bytes(i) != 0x20) i += 1
-        if (ntok == cap) {
-          cap *= 2
-          starts = java.util.Arrays.copyOf(starts, cap)
-          ends = java.util.Arrays.copyOf(ends, cap)
-        }
-        starts(ntok) = s; ends(ntok) = i; ntok += 1
-      }
-    }
+    val spans = tokenSpans(bytes)
+    val ntok = spans.length / 2
     if (ntok < k) return new GenericArrayData(Array.emptyLongArray)
     val pre = keyPrefix.getBytes
     val preLen = pre.length
     // one reusable buffer: [prefix][gram]; the gram region doubles as
     // the dedup probe (wrapped, copy only on first occurrence)
     var maxGram = 0
-    i = 0
+    var i = 0
     while (i <= ntok - k) {
       var len = k - 1
       var j = 0
-      while (j < k) { len += ends(i + j) - starts(i + j); j += 1 }
+      while (j < k) { len += spans(2 * (i + j) + 1) - spans(2 * (i + j)); j += 1 }
       if (len > maxGram) maxGram = len
       i += 1
     }
     val buf = new Array[Byte](preLen + maxGram)
     System.arraycopy(pre, 0, buf, 0, preLen)
     val seen = new java.util.HashSet[UTF8String](ntok * 2)
-    var out = new Array[Long](ntok - k + 1)
+    val out = new Array[Long](ntok - k + 1)
     var nout = 0
     i = 0
     while (i <= ntok - k) {
@@ -177,8 +159,8 @@ object Sketches {
       var j = 0
       while (j < k) {
         if (j > 0) { buf(pos) = 0x20; pos += 1 }
-        val tl = ends(i + j) - starts(i + j)
-        System.arraycopy(bytes, starts(i + j), buf, pos, tl)
+        val tl = spans(2 * (i + j) + 1) - spans(2 * (i + j))
+        System.arraycopy(bytes, spans(2 * (i + j)), buf, pos, tl)
         pos += tl
         j += 1
       }

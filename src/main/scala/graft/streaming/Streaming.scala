@@ -356,7 +356,9 @@ object Streaming {
     * baseline scalars (the [[graft.operators.Graph.pageRank]]
     * n-count class of driver value) folded into the scan-stage bin
     * expression. The PSI arithmetic runs BATCH-side on the bounded
-    * (windows × bins) result: dense frame fill-in, add-1 smoothing,
+    * (windows × bins) result: dense frame fill-in, add-1 smoothing in
+    * DOUBLE (a `1.0` literal would make the LN argument a rounded
+    * decimal(38,6) quotient, off the oracle in the 6th digit),
     * ROUND(·,6) terms, exact DECIMAL per-window sums — the psiDrift
     * cross-engine discipline. Returns (window_start ntz, n_events,
     * psi). */
@@ -405,9 +407,9 @@ object Streaming {
     frame.join(totals, "window_start").crossJoin(broadcast(tbase))
       .select(col("window_start"), col("n_cur"), expr(
         s"""CAST(ROUND(
-           |  ((n_base + 1.0) / (tb + $bins) - (n_cur + 1.0) / (tc + $bins))
-           |  * LN(((n_base + 1.0) / (tb + $bins))
-           |      / ((n_cur + 1.0) / (tc + $bins))),
+           |  ((n_base + 1.0D) / (tb + $bins) - (n_cur + 1.0D) / (tc + $bins))
+           |  * LN(((n_base + 1.0D) / (tb + $bins))
+           |      / ((n_cur + 1.0D) / (tc + $bins))),
            |6) AS DOUBLE)""".stripMargin).as("term"))
       .groupBy("window_start")
       .agg(sum(col("n_cur")).as("n_events"),

@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Minimal bridge into the `sql` package: `Dataset.ofRows` is
@@ -10,6 +11,11 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Catalyst expression → Column, and back (`ExpressionUtils` is
+    * private[sql]). */
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+  def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
   /** Release the executor blocks held by a `localCheckpoint()`ed frame.
     * The checkpoint persists its internal RDD (MEMORY_AND_DISK) outside

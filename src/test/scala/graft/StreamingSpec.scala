@@ -146,6 +146,47 @@ class StreamingSpec extends SparkSpec {
     assert(out.map(_.getAs[Long]("n_events")).sum == ev.count())
   }
 
+  test("driftPerWindow: PSI equals a driver-side double evaluation of its formula") {
+    val (cutoff, bins) = ("2024-01-16", 10)
+    val out = Streaming.driftPerWindow(spark, sf0001, cutoff, bins).collect()
+      .map(r => r.getAs[java.time.LocalDateTime]("window_start") ->
+        (r.getAs[Long]("n_events"), r.getAs[Double]("psi"))).toMap
+    // per-(window, bin) counts over the operator's bin edges, in batch
+    val ev = graft.Tables.events(spark, sf0001).where(col("value").isNotNull)
+    val base = ev.where(col("ts") < lit(cutoff).cast("timestamp"))
+    val st = base.agg(min(col("value").cast("double")),
+      max(col("value").cast("double"))).head()
+    val (mn, mx) = (st.getDouble(0), st.getDouble(1))
+    val bin = expr(
+      s"""CAST(LEAST(GREATEST(
+         |  IF($mx = $mn, 0.0, FLOOR((CAST(value AS DOUBLE) - $mn)
+         |    / (($mx - $mn) / $bins))),
+         |0.0), $bins - 1.0) AS INT)""".stripMargin)
+    val nBase = base.groupBy(bin).count().collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val cur = ev.where(col("ts") >= lit(cutoff).cast("timestamp"))
+      .groupBy(date_trunc("day", col("ts")).cast("timestamp_ntz"), bin)
+      .count().collect()
+      .groupBy(_.getAs[java.time.LocalDateTime](0))
+      .map { case (w, rs) => w -> rs.map(r => r.getInt(1) -> r.getLong(2)).toMap }
+    // the formula in doubles: add-1 smoothing, Spark's LN (StrictMath)
+    // and ROUND(·,6) (HALF_UP over the double's decimal form), exact
+    // decimal sums per window
+    val tb = nBase.values.sum
+    def round6(x: Double) =
+      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)
+    val expected = cur.map { case (w, nCur) =>
+      val tc = nCur.values.sum
+      val psi = (0 until bins).map { b =>
+        val p = (nBase.getOrElse(b, 0L) + 1.0) / (tb + bins)
+        val q = (nCur.getOrElse(b, 0L) + 1.0) / (tc + bins)
+        round6((p - q) * StrictMath.log(p / q))
+      }.sum.toDouble
+      w -> (tc, psi)
+    }
+    assert(out.nonEmpty && out == expected)
+  }
+
   test("upsertStream: merged target is independent of micro-batch split") {
     val dir = Files.createTempDirectory("graft-upsert").toString
     val changelog = Seq(
