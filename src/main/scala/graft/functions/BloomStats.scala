@@ -3,11 +3,10 @@ package graft.functions
 import graft.plans.GraftFunctions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, DoubleType, IntegerType, StringType}
+import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, StringType}
 
 /** Per-file BLOOM FILTER stats for the Txn manifest — the point-key
   * pruning Delta/Iceberg add for exactly the shape min/max cannot
@@ -26,7 +25,7 @@ import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, DoubleType
   * buffer — it rides the SAME one-pass `groupBy(input_file_name)`
   * stats aggregation the min/max/nulls collection uses, with
   * partial-merge = byte-wise OR (map-side combinable, buffer size
-  * constant). The probe ([[BloomMightContain]]) is a codegen'd
+  * constant). The probe ([[BloomStats.mightContain]]) is a codegen'd
   * expression used inside the touched-file candidate join, so the
   * keys frame is never collected. Both sides hash
   * `XXH64(doubleToLongBits(value), seed = hash index)` — one
@@ -94,7 +93,7 @@ object Bloom {
   /** String-key add: OR `v`'s k positions (raw UTF-8 byte hash) into
     * `buf` — the shape TRY_CAST-to-double cannot serve (UUID/string
     * ids cast to NULL and would never be recorded). */
-  def addUtf8(buf: Array[Byte],
+  def add(buf: Array[Byte],
       v: org.apache.spark.unsafe.types.UTF8String, k: Int): Unit = {
     val m = buf.length * 8
     var i = 0
@@ -105,9 +104,9 @@ object Bloom {
     }
   }
 
-  /** String-key membership probe — [[mightContain]]'s UTF-8 twin,
+  /** String-key membership probe — the double probe's UTF-8 twin,
     * same codegen-callable shape. */
-  def mightContainUtf8(buf: Array[Byte],
+  def mightContain(buf: Array[Byte],
       v: org.apache.spark.unsafe.types.UTF8String, k: Int): Boolean = {
     val m = buf.length * 8
     var i = 0
@@ -153,7 +152,7 @@ final case class BloomAgg(child: Expression, mBits: Int, k: Int,
     val v = child.eval(row)
     if (v != null) {
       if (isString)
-        Bloom.addUtf8(buf,
+        Bloom.add(buf,
           v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], k)
       else Bloom.add(buf, v.asInstanceOf[Double], k)
     }
@@ -178,50 +177,6 @@ final case class BloomAgg(child: Expression, mBits: Int, k: Int,
       c: IndexedSeq[Expression]): BloomAgg = copy(child = c.head)
 }
 
-/** Codegen'd membership probe: `(bloom binary, value double|string,
-  * k int) → boolean`. Sits inside the touched-file candidate join, so
-  * it stays in the codegen stage rather than round-tripping an
-  * interpreted lambda per (key, file) pair; `k` is a column because
-  * each manifest entry carries its own hash count. The value's type
-  * picks the hash at ANALYSIS time (double bits vs raw UTF-8 bytes),
-  * matching [[BloomAgg]]'s build-side dispatch. */
-final case class BloomMightContain(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "graft_bloom_contains"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (first.dataType == BinaryType &&
-        (second.dataType == DoubleType || second.dataType == StringType) &&
-        third.dataType == IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects (binary, double|string, int), got " +
-        s"(${first.dataType.simpleString}, ${second.dataType.simpleString}, " +
-        s"${third.dataType.simpleString})")
-
-  private lazy val isString = second.dataType == StringType
-
-  override def nullSafeEval(buf: Any, v: Any, k: Any): Any =
-    if (isString)
-      Bloom.mightContainUtf8(buf.asInstanceOf[Array[Byte]],
-        v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-        k.asInstanceOf[Int])
-    else Bloom.mightContain(buf.asInstanceOf[Array[Byte]],
-      v.asInstanceOf[Double], k.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val fn = if (isString) "mightContainUtf8" else "mightContain"
-    nullSafeCodeGen(ctx, ev, (buf, v, k) =>
-      s"${ev.value} = graft.functions.Bloom.$fn($buf, $v, $k);")
-  }
-
-  override protected def withNewChildrenInternal(a: Expression,
-      b: Expression, c: Expression): BloomMightContain =
-    copy(first = a, second = b, third = c)
-}
-
 /** Column wrappers; the builders live in the
   * [[graft.plans.GraftFunctions]] table. */
 object BloomStats {
@@ -234,7 +189,14 @@ object BloomStats {
       k: Int = Bloom.DefaultHashes): Column =
     GraftFunctions.call(AggName, value)(mBits, k)
 
-  /** Membership-probe column. */
+  /** Membership-probe column: `(bloom binary, value double|string,
+    * k int) → boolean`, codegen'd, so it stays in the stage of the
+    * touched-file candidate join instead of round-tripping an
+    * interpreted lambda per (key, file) pair. `k` is a column because
+    * each manifest entry carries its own hash count. The value's type
+    * picks the [[Bloom.mightContain]] overload (double bits or raw
+    * UTF-8 bytes) at analysis time, matching [[BloomAgg]]'s build-side
+    * dispatch. */
   def mightContain(spark: SparkSession, bloom: Column, value: Column,
       k: Column): Column =
     GraftFunctions.call(ContainsName, bloom, value, k)()

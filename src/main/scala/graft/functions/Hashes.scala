@@ -3,36 +3,24 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Hash-sketch primitives: shingling, MinHash signatures, SimHash.
+/** Hash-sketch helpers over signature columns: LSH band keys,
+  * signature matches, simhash bands, Hamming distance, row checksums.
   *
-  * MinHash uses an md5-keyed family: permutation p's hash of shingle s is
-  * the lexicographic value of `md5(p || ':' || s)`, and the signature
-  * entry is the minimum over shingles. Using a cryptographic hash keyed
-  * by the permutation index gives 16 independent uniform orderings
-  * without carrying seed tables, is endianness/engine-portable (any
-  * system with md5 reproduces the signature bit-for-bit — the DuckDB
-  * oracle does), and string-min is order-free so the whole signature is
-  * one row-local expression: NO shuffle to sketch 100 TB.
+  * The signatures themselves come from the native kernels in
+  * [[graft.plans.Sketches]]. MinHash is an md5-keyed family:
+  * permutation p's hash of shingle s is the lexicographic value of
+  * `md5(p || ':' || s)`, and the signature entry is the minimum over
+  * shingles. A cryptographic hash keyed by the permutation index gives
+  * independent uniform orderings without seed tables, is
+  * engine-portable (any system with md5 reproduces the signature
+  * bit-for-bit — the DuckDB oracle does), and string-min is order-free,
+  * so the signature is row-local: NO shuffle to sketch 100 TB.
   *
-  * SimHash uses xxhash64 (codegen'd, 64 independent bits from one hash):
-  * bit j of the signature is the sign of Σ_tokens (±1 by token-hash bit
-  * j). Near-dup docs differ in few bits; banding the 64 bits into 4×16
-  * gives LSH buckets for candidate generation.
+  * SimHash bit j is the sign of Σ_tokens ±1 by bit j of the token's
+  * 60-bit md5 prefix. Near-dup docs differ in few bits; banding the 60
+  * bits into 4×15 gives LSH buckets for candidate generation.
   */
 object Hashes {
-
-  /** distinct word k-grams over a token-array column. Row-local. */
-  def shingles(toksCol: String, k: Int): Column =
-    expr(
-      s"""array_distinct(transform(sequence(1, size($toksCol) - ${k - 1}),
-         |  i -> concat_ws(' ', slice($toksCol, i, $k))))""".stripMargin)
-
-  /** MinHash signature: array<string> of `perms` md5-minima. */
-  def minhashSignature(shinglesCol: String, perms: Int = 16): Column =
-    expr(
-      s"""transform(sequence(0, ${perms - 1}),
-         |  p -> array_min(transform($shinglesCol,
-         |         s -> md5(concat(cast(p AS STRING), ':', s)))))""".stripMargin)
 
   /** LSH band keys: md5 over `rows`-sized runs of the signature.
     * bands × rows must equal the signature length. */
@@ -47,16 +35,6 @@ object Hashes {
   /** Estimated Jaccard from two signatures: matching fraction. */
   def sigMatches(sigA: String, sigB: String): Column =
     expr(s"size(filter(zip_with($sigA, $sigB, (x, y) -> x = y), v -> v))")
-
-  /** 60-bit SimHash over a token-array column (multiplicity-weighted).
-    * Token hash = first 15 hex digits of md5 (engine-portable; the
-    * DuckDB oracle computes the identical signature). */
-  def simhash(toksCol: String): Column =
-    expr(
-      s"""aggregate(sequence(0, 59), CAST(0 AS BIGINT), (acc, j) ->
-         |  acc + IF(aggregate($toksCol, 0,
-         |             (a, t) -> a + IF(((CAST(CONV(SUBSTR(MD5(t), 1, 15), 16, 10) AS BIGINT) >> j) & 1) = 1, 1, -1)) >= 0,
-         |           shiftleft(CAST(1 AS BIGINT), j), CAST(0 AS BIGINT)))""".stripMargin)
 
   /** 15-bit band `i` (0..3) of a simhash column, for LSH bucketing. */
   def simhashBand(simCol: String, i: Int): Column =

@@ -65,8 +65,6 @@ object Jute {
   /** Parse a YAML (or JSON — YAML is a superset) template. */
   def parse(template: String): JsonNode = yaml.readTree(template)
 
-  def parseJson(template: String): JsonNode = json.readTree(template)
-
   /** Top-level mapping → one Column per output field (a `$defs` block,
     * if present, contributes template functions, not a column). */
   def columns(template: String): Seq[Column] = {

@@ -3,30 +3,13 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Dense-vector math over `array<float|double>` columns as pure Catalyst
-  * expressions (zip_with/aggregate — codegen'd, row-local, no UDF).
-  *
-  * Determinism note: sums fold left-to-right, so the same inputs give
-  * bit-identical doubles on any engine that folds sequentially (the
-  * DuckDB oracle's list_sum does) — which is what lets cosine results be
-  * hash-compared across engines after a fixed rounding.
+/** Dense-vector helpers over `array<float|double>` columns. Dot
+  * products and cosines are native kernels ([[graft.plans.Sketches]],
+  * through the `GraftFunctions` helpers).
   */
 object Vectors {
   /** cast array<float> → array<double> (exact). */
   def toDouble(v: Column): Column = v.cast("array<double>")
-
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-
-  def norm(a: Column): Column =
-    sqrt(aggregate(transform(a, x => x * x), lit(0.0), (acc, v) => acc + v))
-
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
-  /** cosine given precomputed norms (precompute once per side before a
-    * pair join — at N² candidate pairs this halves the flops). */
-  def cosinePre(a: Column, b: Column, normA: Column, normB: Column): Column =
-    dot(a, b) / (normA * normB)
 
   /** Per-group centroids in LONG form — one row per (group, dimension)
     * with the member count and the rounded mean component. The k-means

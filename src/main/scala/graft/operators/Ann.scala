@@ -328,7 +328,7 @@ object Ann {
     * Codebooks: per-subspace Lloyd k-means (init = the first
     * `codebookK` vectors by id, one update round), assignment by the
     * L2 identity argmin |x−c|² = argmin (c·c − 2x·c) — both terms are
-    * native [[graft.plans.DotProduct]] dots, so assignment is exact
+    * native [[graft.plans.Sketches.dot]] dots, so assignment is exact
     * deterministic arithmetic any engine reproduces (round(·,9) +
     * cid tiebreak). Codeword means use exact DECIMAL(38,9) sums, the
     * [[trainCentroids]] discipline, so they are order-independent.
@@ -734,7 +734,7 @@ object Ann {
     * rounds whose plan and job count grew with k (5.1s in the r10
     * bench vs 1.3s for this kernel, same results). The kernel's
     * arithmetic mirrors the expression form exactly: cosine folds
-    * left-to-right like [[graft.plans.CosineSimilarity]], every
+    * left-to-right like [[graft.plans.Sketches.cosine]], every
     * rounding is java BigDecimal.valueOf(·).setScale(HALF_UP) — the
     * same path Spark's ROUND takes on doubles — and all selection
     * happens on round(·, 6) values so any engine reproduces it.
@@ -774,7 +774,7 @@ object Ann {
     def r(v: Double, s: Int): Double =
       java.math.BigDecimal.valueOf(v)
         .setScale(s, java.math.RoundingMode.HALF_UP).doubleValue()
-    // identical accumulation order to CosineSimilarity.nullSafeEval —
+    // identical accumulation order to Sketches.cosine —
     // bit-identical doubles, so the round-6 values cannot diverge
     def cos(xs: Array[Double], ys: Array[Double]): Double = {
       val n = math.min(xs.length, ys.length)

@@ -11,7 +11,7 @@ import graft.plans.GraftFunctions
   *  - Exact dedup groups on `md5(text)` — a 32-byte shuffle key — never
   *    on the document body, so shuffle bytes are O(rows), not O(corpus).
   *  - MinHash: signatures are computed row-locally (native codegen'd
-  *    [[graft.plans.WordShingles]] + [[graft.plans.MinHashSignature]]);
+  *    [[graft.plans.Sketches.wordShingles]] + [[graft.plans.Sketches.minhashSig]]);
   *    exact duplicates are collapsed to one representative per distinct
   *    text BEFORE banding, so a hot text (the classic mass-duplicated
   *    boilerplate doc) contributes ONE row to every band bucket instead
@@ -697,7 +697,7 @@ object Dedup {
   /** Embedding-cosine near-dup pairs via banded hyperplane LSH.
     *
     * Candidate generation: `bands × bandBits` deterministic hyperplanes
-    * (the [[graft.plans.LshBucket]] LCG family) hash every vector to a
+    * (the [[graft.plans.Sketches.lshBucket]] LCG family) hash every vector to a
     * `planes`-bit bucket; band b is the b-th `bandBits`-bit slice. Two
     * vectors are candidates iff they agree on at least one band — a
     * key-equality join on (band, value), never an all-pairs product.

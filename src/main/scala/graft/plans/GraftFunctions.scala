@@ -1,13 +1,16 @@
 package graft.plans
 
-import graft.functions.{BloomAgg, BloomMightContain, BloomStats}
+import graft.functions.{BloomAgg, BloomStats}
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types._
 
 /** graft's native functions: ONE name → builder table ([[builders]]).
+  * A scalar function is a [[Kernel]] row (types, output type, constants,
+  * static method), all served by the one [[NativeFn]] expression; the
+  * two aggregates ([[GramAgg]], [[BloomAgg]]) have builders of their own.
   *
   * The Column helpers below build their `Column` straight from the
   * table's `Expression`, so calling a helper never touches a session's
@@ -42,74 +45,66 @@ object GraftFunctions {
 
   type Builder = Seq[Expression] => Expression
 
-  private def int(e: Expression): Int = e.eval().asInstanceOf[Number].intValue()
+  private val Sk = "graft.plans.Sketches"
+  private val Img = "graft.plans.ImageCodec"
+  private val Vec = "array<double>"
+  private val Toks = "array<string>"
+  private val LongArray = ArrayType(LongType, containsNull = false)
 
-  private def unary(name: String)(f: Expression => Expression): (String, Builder) =
-    name -> { exprs =>
-      require(exprs.length == 1, s"$name expects 1 argument")
-      f(exprs.head)
-    }
+  /** Every scalar native function: one [[Kernel]] row each, all served
+    * by [[NativeFn]]. */
+  val kernels: Seq[Kernel] = Seq(
+    Kernel(CosineName, Seq(Vec, Vec), DoubleType, s"$Sk.cosine"),
+    Kernel(DotName, Seq(Vec, Vec), DoubleType, s"$Sk.dot"),
+    Kernel(MinHashName, Seq(Toks), ArrayType(StringType), s"$Sk.minhashSig", Seq("int")),
+    Kernel(SimHashName, Seq(Toks), LongType, s"$Sk.simhash64"),
+    Kernel(LshName, Seq(Vec), LongType, s"$Sk.lshBucket", Seq("int")),
+    Kernel(ShinglesName, Seq(Toks), ArrayType(StringType), s"$Sk.wordShingles", Seq("int")),
+    // NULL text → NULL row; callers fold a NULL group into prefix ""
+    Kernel(GramKeysName, Seq("string", "string"), LongArray, s"$Sk.gramKeys", Seq("int")),
+    Kernel(Md5GramSetName, Seq("string"), ArrayType(BinaryType, containsNull = false),
+      s"$Sk.md5GramSet", Seq("int")),
+    Kernel(WinHashesName, Seq(Toks), LongArray, s"$Sk.winHashes", Seq("int")),
+    Kernel(HashEmbedCellsName, Seq("string"), ArrayType(StructType(Seq(
+      StructField("d", IntegerType, nullable = false),
+      StructField("v", LongType, nullable = false))), containsNull = false),
+      s"$Sk.hashEmbedCells", Seq("int")),
+    Kernel(VecDigestName, Seq(Vec), BinaryType, s"$Sk.vecDigest"),
+    Kernel(PHashName, Seq("binary"), LongType, s"$Sk.phash60"),
+    Kernel(DHashName, Seq("binary"), LongType, s"$Sk.dhash60"),
+    Kernel(GrayDecodeName, Seq("binary"), BinaryType, s"$Img.decodeGrayOrSelf"),
+    Kernel(PpmEncodeName, Seq("binary"), BinaryType, s"$Img.encodePpmGray"),
+    Kernel(BmpEncodeName, Seq("binary"), BinaryType, s"$Img.encodeBmpGray"),
+    Kernel(JpegEncodeName, Seq("binary"), BinaryType, "graft.plans.JpegCodec.encodeJpegGray"),
+    Kernel(NgramScoreName, Seq("string"), ArrayType(LongType), s"$Sk.ngramScoreMilli",
+      Seq("array<bigint>"), c => require(c.head.asInstanceOf[Seq[_]].nonEmpty,
+        s"$NgramScoreName: empty weight table")),
+    Kernel(AudioFpName, Seq("binary"), ArrayType(LongType), s"$Sk.audioFp", Seq.fill(4)("int"),
+      c => require(c.forall(_.asInstanceOf[Int] > 0),
+        s"$AudioFpName: all parameters must be positive")),
+    Kernel(CharEntropyName, Seq("string"), StructType(Seq(
+      StructField("n", LongType, nullable = false),
+      StructField("nd", LongType, nullable = false),
+      StructField("s", DecimalType(38, 6), nullable = true))), s"$Sk.charEntropyStats"),
+    Kernel(BloomStats.ContainsName, Seq("binary", "double|string", "int"), BooleanType,
+      "graft.functions.Bloom.mightContain"))
 
-  private def binary(name: String)(f: (Expression, Expression) => Expression): (String, Builder) =
-    name -> { exprs =>
-      require(exprs.length == 2, s"$name expects 2 arguments")
-      f(exprs.head, exprs(1))
-    }
+  private val kernelByName: Map[String, Kernel] = kernels.map(k => k.name -> k).toMap
 
-  /** (input, const int) functions; `sig` is the message's signature. */
-  private def withInt(name: String, sig: String)(
-      f: (Expression, Int) => Expression): (String, Builder) =
-    name -> { exprs =>
-      require(exprs.length == 2 && exprs(1).foldable, s"$name expects $sig")
-      f(exprs.head, int(exprs(1)))
-    }
+  private[plans] def kernel(name: String): Kernel = kernelByName(name)
 
-  /** Every native function, by SQL name. */
-  val builders: Seq[(String, Builder)] = Seq(
-    binary(CosineName)(CosineSimilarity(_, _)),
-    binary(DotName)(DotProduct(_, _)),
-    withInt(MinHashName, "(array<string>, const int)")(MinHashSignature(_, _)),
-    unary(SimHashName)(SimHash64(_)),
-    withInt(LshName, "(array<double>, const int)")(LshBucket(_, _)),
-    withInt(ShinglesName, "(array<string>, const int)")(WordShingles(_, _)),
-    GramKeysName -> { exprs =>
-      require(exprs.length == 3 && exprs(2).foldable,
-        s"$GramKeysName expects (string, string, const int)")
-      GramKeys(exprs.head, exprs(1), int(exprs(2)))
+  /** Every native function, by SQL name: the scalar rows, then the two
+    * aggregates. */
+  val builders: Seq[(String, Builder)] = kernels.map(k => k.name -> (k.build _)) ++ Seq(
+    GramAggName -> { exprs =>
+      require(exprs.length == 1, s"$GramAggName expects (array<double>)")
+      GramAgg(exprs.head).toAggregateExpression()
     },
-    withInt(Md5GramSetName, "(string, const int)")(Md5GramSet(_, _)),
-    withInt(WinHashesName, "(array<string>, const int)")(WinHashes(_, _)),
-    withInt(HashEmbedCellsName, "(string, const int)")(HashEmbedCells(_, _)),
-    unary(VecDigestName)(VecDigest(_)),
-    unary(PHashName)(PHash60(_)),
-    unary(DHashName)(DHash60(_)),
-    unary(GrayDecodeName)(GrayDecode(_)),
-    unary(PpmEncodeName)(PpmEncode(_)),
-    unary(BmpEncodeName)(BmpEncode(_)),
-    unary(JpegEncodeName)(JpegEncode(_)),
-    NgramScoreName -> { exprs =>
-      require(exprs.length == 2 && exprs(1).foldable,
-        s"$NgramScoreName expects (string, const array<bigint>)")
-      val w = exprs(1).eval().asInstanceOf[ArrayData].toLongArray().toSeq
-      NgramScore(exprs.head, w)
-    },
-    AudioFpName -> { exprs =>
-      require(exprs.length == 5 && exprs.tail.forall(_.foldable),
-        s"$AudioFpName expects (binary, 4 const ints)")
-      val Seq(fb, fo, dt, qd) = exprs.tail.map(int)
-      AudioFp(exprs.head, fb, fo, dt, qd)
-    },
-    unary(GramAggName)(GramAgg(_).toAggregateExpression()),
-    unary(CharEntropyName)(CharEntropyStats(_)),
     BloomStats.AggName -> { exprs =>
       require(exprs.length == 3 && exprs(1).foldable && exprs(2).foldable,
         s"${BloomStats.AggName} expects (double, const bits, const hashes)")
+      def int(e: Expression) = e.eval().asInstanceOf[Number].intValue()
       BloomAgg(exprs.head, int(exprs(1)), int(exprs(2))).toAggregateExpression()
-    },
-    BloomStats.ContainsName -> { exprs =>
-      require(exprs.length == 3,
-        s"${BloomStats.ContainsName} expects (binary, double, int hashes)")
-      BloomMightContain(exprs.head, exprs(1), exprs(2))
     })
 
   private val byName: Map[String, Builder] = builders.toMap
@@ -227,7 +222,9 @@ object GraftFunctions {
 
   /** Native one-pass Gram-triangle aggregate: array<double> vectors →
     * one array<struct<i,j,n,s>> of d(d+1)/2 cells. See [[GramAgg]] for
-    * the exactness contract. */
+    * the exactness contract. A NULL element raises (`null element at
+    * index k`), unlike the SQL form (`round(vi·vj, 9)` summed as
+    * DECIMAL(38,9)), whose NULL products drop out of their sums. */
   def gramAgg(spark: SparkSession, vec: Column): Column =
     call(GramAggName, vec.cast("array<double>"))()
 

@@ -1,23 +1,21 @@
 package graft.plans
 
 import java.security.MessageDigest
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Row-local sketch kernels + native Catalyst expressions around them.
+/** Row-local kernels behind graft's native scalar functions: static
+  * methods that [[NativeFn]] calls once per row, from generated code
+  * and from interpreted eval alike (the rows are in [[GraftFunctions]]).
   *
-  * The higher-order-function formulations in functions.Hashes are the
-  * readable reference (`transform`/`aggregate` over shingles); they are
-  * also interpreter-bound — every lambda node re-walks per element, and
-  * the md5/xxhash sub-expressions evaluate interpreted inside the HOF.
-  * At sf0.1 the minhash+simhash pair cost ~37s of a 77s bench. These
-  * expressions compute the identical values (same md5("p:shingle")
-  * keying, same xxhash64 token hashing) in tight JVM loops called once
-  * per row from generated code.
+  * Most replace a higher-order-function formulation (`transform` /
+  * `aggregate` over shingles or vectors). Those are interpreter-bound:
+  * every lambda node re-walks per element, and the md5/xxhash
+  * sub-expressions evaluate interpreted inside the HOF. At sf0.1 the
+  * minhash+simhash pair cost ~37s of a 77s bench. These kernels compute
+  * the identical values (same md5("p:shingle") keying, same md5 token
+  * hashing, same left-to-right folds) in tight JVM loops; the specs
+  * hold them equal to the HOF forms.
   */
 object Sketches {
   private val md5Local = new ThreadLocal[MessageDigest] {
@@ -46,9 +44,42 @@ object Sketches {
     false
   }
 
+  /** Cosine similarity of two double vectors: the dot product and both
+    * norms in one left-to-right pass over the common prefix. The folds
+    * run in the order of `aggregate(zip_with(...))` and DuckDB's
+    * `list_sum`, so on equal-length vectors the result is bit-identical
+    * to the oracle's. As a kernel it stays inside the codegen stage of
+    * the O(N²) candidate joins it serves, where the HOF form would
+    * walk an interpreted lambda tree per pair. */
+  def cosine(xs: ArrayData, ys: ArrayData): Double = {
+    val n = math.min(xs.numElements(), ys.numElements())
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val x = xs.getDouble(i); val y = ys.getDouble(i)
+      dot += x * y; na += x * x; nb += y * y
+      i += 1
+    }
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
+
+  /** Dot product of two double vectors — [[cosine]]'s loop without the
+    * norms, folded left-to-right like DuckDB's `list_sum`. One kernel
+    * covers dot(a,b), squared norms (dot(x,x)) and, by the identity
+    * argmin |x−c|² = argmin (c·c − 2x·c), L2 codebook assignment — so
+    * PQ-style quantization needs no second distance primitive. */
+  def dot(xs: ArrayData, ys: ArrayData): Double = {
+    val n = math.min(xs.numElements(), ys.numElements())
+    var dot = 0.0
+    var i = 0
+    while (i < n) { dot += xs.getDouble(i) * ys.getDouble(i); i += 1 }
+    dot
+  }
+
   /** MinHash signature: for p in 0..perms-1, min over shingles of
     * md5(p + ":" + shingle) as lowercase hex — byte-for-byte the value
-    * the HOF form (and the DuckDB oracle) computes. Called from
+    * the HOF form (and the DuckDB oracle) computes. A NULL shingle is
+    * skipped, as `array_min` skips the NULL md5 it gives. Called from
     * generated code, one call per row. */
   def minhashSig(shingles: ArrayData, perms: Int): ArrayData = {
     val md = md5Local.get()
@@ -59,15 +90,17 @@ object Sketches {
     var i = 0
     val n = shingles.numElements()
     while (i < n) {
-      val s = shingles.getUTF8String(i).getBytes
-      p = 0
-      while (p < perms) {
-        md.reset()
-        md.update(prefixes(p))
-        md.update(s)
-        val d = md.digest()
-        if (mins(p) == null || ltUnsigned(d, mins(p))) mins(p) = d
-        p += 1
+      if (!shingles.isNullAt(i)) {
+        val s = shingles.getUTF8String(i).getBytes
+        p = 0
+        while (p < perms) {
+          md.reset()
+          md.update(prefixes(p))
+          md.update(s)
+          val d = md.digest()
+          if (mins(p) == null || ltUnsigned(d, mins(p))) mins(p) = d
+          p += 1
+        }
       }
       i += 1
     }
@@ -75,28 +108,40 @@ object Sketches {
   }
 
   /** Distinct word k-grams (space-joined, first-occurrence order) — the
-    * value-identical native form of functions.Hashes.shingles'
+    * value-identical native form of
     * `array_distinct(transform(sequence(...), concat_ws(slice(...))))`.
     * That HOF chain evaluates interpreted per row; in the dedup operators
     * it sits under a self-join (so it runs once per join SIDE) which made
-    * shingling, not joining, the dominant cost at sf0.1. */
+    * shingling, not joining, the dominant cost at sf0.1. A NULL token
+    * is skipped, as `concat_ws` skips it: the gram joins the window's
+    * non-NULL tokens (an all-NULL window is the empty string). */
   def wordShingles(tokens: ArrayData, k: Int): ArrayData = {
     val n = tokens.numElements()
     if (n < k) return new GenericArrayData(Array.empty[Any])
     val seen = new java.util.LinkedHashSet[UTF8String](n * 2)
     var i = 0
     while (i <= n - k) {
-      var len = k - 1 // separators
+      var len = 0
+      var present = 0
       var j = 0
-      while (j < k) { len += tokens.getUTF8String(i + j).numBytes(); j += 1 }
-      val out = new Array[Byte](len)
+      while (j < k) {
+        if (!tokens.isNullAt(i + j)) {
+          len += tokens.getUTF8String(i + j).numBytes(); present += 1
+        }
+        j += 1
+      }
+      val out = new Array[Byte](len + math.max(present - 1, 0))
       var pos = 0
+      var first = true
       j = 0
       while (j < k) {
-        if (j > 0) { out(pos) = ' '.toByte; pos += 1 }
-        val t = tokens.getUTF8String(i + j)
-        t.writeToMemory(out, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + pos)
-        pos += t.numBytes()
+        if (!tokens.isNullAt(i + j)) {
+          if (!first) { out(pos) = ' '.toByte; pos += 1 }
+          first = false
+          val t = tokens.getUTF8String(i + j)
+          t.writeToMemory(out, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + pos)
+          pos += t.numBytes()
+        }
         j += 1
       }
       seen.add(UTF8String.fromBytes(out))
@@ -113,8 +158,7 @@ object Sketches {
     * replaces — `xxhash64(concat_ws("|", grp, gram))` over
     * `explode(graft_shingles(filter(split(lower(text), " "), t -> t <>
     * ''), k))` — by construction:
-    *  - lowercase is [[UTF8String.toLowerCase]], the same call
-    *    `lower()` makes;
+    *  - lowercase is [[lower]], the call `lower()` makes;
     *  - `split(s, " ")` splits on single 0x20 bytes (a space never
     *    occurs inside a UTF-8 multibyte sequence), and the `t <> ''`
     *    filter drops the empties consecutive/leading/trailing spaces
@@ -131,7 +175,7 @@ object Sketches {
     * Output array length == distinct gram count (the n_g the packed
     * posting key needs); fewer than k tokens → empty array. */
   def gramKeys(keyPrefix: UTF8String, text: UTF8String, k: Int): ArrayData = {
-    val bytes = text.toLowerCase.getBytes
+    val bytes = lower(text).getBytes
     val spans = tokenSpans(bytes)
     val ntok = spans.length / 2
     if (ntok < k) return new GenericArrayData(Array.emptyLongArray)
@@ -180,6 +224,14 @@ object Sketches {
     new GenericArrayData(java.util.Arrays.copyOf(out, nout))
   }
 
+  /** `lower(text)` as SQL computes it under the default collation and
+    * ICU case mappings: ASCII folds byte by byte, anything else is
+    * lowercased by ICU over the string made valid (an invalid UTF-8
+    * sequence becomes U+FFFD). `UTF8String.toLowerCase` differs there:
+    * it decodes invalid bytes its own way and lowercases with the JVM. */
+  private def lower(text: UTF8String): UTF8String =
+    org.apache.spark.sql.catalyst.util.CollationAwareUTF8String.toLowerCase(text)
+
   /** Shared byte-level whitespace tokenizer: spans of non-0x20 bytes
     * (split(" ") + drop-empties, byte-exact — see [[gramKeys]]).
     * Returns packed spans: [s0,e0,s1,e1,...], length 2·ntok. */
@@ -220,9 +272,11 @@ object Sketches {
     * hex string's value 1:1). Because the array is per-doc distinct,
     * the caller's old global `.distinct()` Exchange is dropped
     * outright — (doc, digest) rows come out of the explode already
-    * unique. Fewer than n tokens → empty array. */
+    * unique. Fewer than n tokens → empty array. Invalid UTF-8 is
+    * re-encoded first, as `split` decodes and re-encodes it. */
   def md5GramSet(text: UTF8String, n: Int): ArrayData = {
-    val bytes = text.getBytes
+    val bytes =
+      (if (text.isValid) text else UTF8String.fromString(text.toString)).getBytes
     val spans = tokenSpans(bytes)
     val ntok = spans.length / 2
     if (ntok < n) return new GenericArrayData(Array.empty[Any])
@@ -329,7 +383,7 @@ object Sketches {
     * entirely WITHIN-doc — this computes the same cells row-locally,
     * removing that shuffle outright (guide §2.4). */
   def hashEmbedCells(text: UTF8String, dim: Int): ArrayData = {
-    val bytes = text.toLowerCase.getBytes
+    val bytes = lower(text).getBytes
     val spans = tokenSpans(bytes)
     val ntok = spans.length / 2
     val md = md5Local.get()
@@ -375,7 +429,8 @@ object Sketches {
         s += vec.getDouble(d) * ((seed.toDouble / 2147483648.0) * 2.0 - 1.0)
         d += 1
       }
-      if (s >= 0.0) bucket |= (1L << p)
+      // NaN sets the bit: SQL orders NaN above every value
+      if (!(s < 0.0)) bucket |= (1L << p)
       p += 1
     }
     bucket
@@ -494,13 +549,15 @@ object Sketches {
 
   /** 60-bit SimHash over tokens (multiplicity-weighted), bit j from the
     * sign of Σ ±1 by bit j of [[tokenHash60]] — engine-portable (pure
-    * md5), so near-dup results are oracle-checkable cross-engine. */
+    * md5), so near-dup results are oracle-checkable cross-engine. A
+    * NULL token votes as hash 0 (−1 on every bit), as the SQL form's
+    * `IF(NULL, 1, -1)` does. */
   def simhash64(tokens: ArrayData): Long = {
     val counts = new Array[Int](60)
     var i = 0
     val n = tokens.numElements()
     while (i < n) {
-      val h = tokenHash60(tokens.getUTF8String(i))
+      val h = if (tokens.isNullAt(i)) 0L else tokenHash60(tokens.getUTF8String(i))
       var j = 0
       while (j < 60) {
         if (((h >>> j) & 1L) == 1L) counts(j) += 1 else counts(j) -= 1
@@ -696,405 +753,4 @@ object Sketches {
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](n, counts.size().toLong, dec))
   }
-}
-
-private[plans] trait StringArrayInput { self: UnaryExpression =>
-  override def checkInputDataTypes(): TypeCheckResult = self.child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"${self.prettyName} expects array<string>, got ${t.simpleString}")
-  }
-}
-
-/** array<string> shingles → array<string> minhash signature (native). */
-final case class MinHashSignature(child: Expression, perms: Int)
-    extends UnaryExpression with StringArrayInput {
-  override def dataType: DataType = ArrayType(StringType)
-  override def prettyName: String = "graft_minhash_sig"
-
-  override def nullSafeEval(input: Any): Any =
-    Sketches.minhashSig(input.asInstanceOf[ArrayData], perms)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.Sketches.minhashSig($c, $perms);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** array<string> tokens → array<string> distinct word k-grams (native). */
-final case class WordShingles(child: Expression, k: Int)
-    extends UnaryExpression with StringArrayInput {
-  override def dataType: DataType = ArrayType(StringType)
-  override def prettyName: String = "graft_shingles"
-
-  override def nullSafeEval(input: Any): Any =
-    Sketches.wordShingles(input.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.Sketches.wordShingles($c, $k);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** (string keyPrefix, string text) → array<bigint> distinct word
-  * k-gram posting keys in one fused pass (native; value contract in
-  * [[Sketches.gramKeys]]). NULL text → NULL row (the `size(...) >= 1`
-  * caller filter then drops it, matching the old `size(tokens) >= n`
-  * gate); callers fold a NULL group column into keyPrefix = "". */
-final case class GramKeys(prefix: Expression, text: Expression, k: Int)
-    extends BinaryExpression {
-  override def left: Expression = prefix
-  override def right: Expression = text
-  override def checkInputDataTypes(): TypeCheckResult =
-    (prefix.dataType, text.dataType) match {
-      case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (a, b) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (string, string), got " +
-          s"(${a.simpleString}, ${b.simpleString})")
-    }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_gram_keys"
-
-  override def nullSafeEval(p: Any, t: Any): Any =
-    Sketches.gramKeys(p.asInstanceOf[UTF8String],
-      t.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (p, t) =>
-      s"${ev.value} = graft.plans.Sketches.gramKeys($p, $t, $k);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(prefix = newLeft, text = newRight)
-}
-
-/** string text → array<binary> distinct word n-gram md5 digests
-  * (native; see [[Sketches.md5GramSet]]). */
-final case class Md5GramSet(child: Expression, n: Int)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${t.simpleString}")
-  }
-  override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
-  override def prettyName: String = "graft_md5_gram_set"
-
-  override def nullSafeEval(input: Any): Any =
-    Sketches.md5GramSet(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.Sketches.md5GramSet($c, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** array<string> tokens → array<bigint> 60-bit md5 window hashes in
-  * position order (native; see [[Sketches.winHashes]]). */
-final case class WinHashes(child: Expression, k: Int)
-    extends UnaryExpression with StringArrayInput {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_win_hashes"
-
-  override def nullSafeEval(input: Any): Any =
-    Sketches.winHashes(input.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.Sketches.winHashes($c, $k);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** string text → array<struct<d int, v bigint>> nonzero feature-hash
-  * cells (native; see [[Sketches.hashEmbedCells]]). */
-final case class HashEmbedCells(child: Expression, dim: Int)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${t.simpleString}")
-  }
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("d", IntegerType, nullable = false),
-    StructField("v", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "graft_hash_embed_cells"
-
-  override def nullSafeEval(input: Any): Any =
-    Sketches.hashEmbedCells(input.asInstanceOf[UTF8String], dim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.Sketches.hashEmbedCells($c, $dim);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** array<double> vector → bigint hyperplane-LSH bucket (native). */
-final case class LshBucket(child: Expression, planes: Int)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<double>, got ${t.simpleString}")
-  }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_lsh_bucket"
-
-  override def nullSafeEval(input: Any): Any =
-    Sketches.lshBucket(input.asInstanceOf[ArrayData], planes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.Sketches.lshBucket($c, $planes);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** array<double> vector → binary16 128-bit value digest (native). */
-final case class VecDigest(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<double>, got ${t.simpleString}")
-  }
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_vec_digest"
-
-  override def nullSafeEval(input: Any): Any =
-    Sketches.vecDigest(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.Sketches.vecDigest($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-private[plans] trait BinaryInput { self: UnaryExpression =>
-  override def checkInputDataTypes(): TypeCheckResult = self.child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"${self.prettyName} expects binary, got ${t.simpleString}")
-  }
-}
-
-/** binary payload → bigint 60-bit average-hash (native). */
-final case class PHash60(child: Expression)
-    extends UnaryExpression with BinaryInput {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_phash60"
-
-  override def nullSafeEval(input: Any): Any =
-    Sketches.phash60(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.Sketches.phash60($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** binary container → binary grayscale pixels for recognized image
-  * formats (PPM P5/P6, 24-bit BMP — [[ImageCodec]]), the input bytes
-  * UNCHANGED otherwise (the documented byte-strip stand-in for formats
-  * this sandbox cannot decode). Codegen'd static call, scan-stage. */
-final case class GrayDecode(child: Expression)
-    extends UnaryExpression with BinaryInput {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_gray_decode"
-
-  override def nullSafeEval(input: Any): Any =
-    ImageCodec.decodeGrayOrSelf(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.ImageCodec.decodeGrayOrSelf($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** binary gray buffer → binary P6 PPM (r=g=b per pixel, shape chosen so
-  * the row-major pixel stream is exactly the input — [[ImageCodec]]). */
-final case class PpmEncode(child: Expression)
-    extends UnaryExpression with BinaryInput {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_ppm_encode"
-
-  override def nullSafeEval(input: Any): Any =
-    ImageCodec.encodePpmGray(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.ImageCodec.encodePpmGray($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** binary gray buffer → binary 24-bit BMP (b=g=r per pixel, same shape
-  * rule as [[PpmEncode]] — [[ImageCodec.encodeBmpGray]]). */
-final case class BmpEncode(child: Expression)
-    extends UnaryExpression with BinaryInput {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_bmp_encode"
-
-  override def nullSafeEval(input: Any): Any =
-    ImageCodec.encodeBmpGray(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.ImageCodec.encodeBmpGray($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** binary gray buffer → binary baseline grayscale JPEG (same shape
-  * rule as [[PpmEncode]] — [[JpegCodec.encodeJpegGray]], all-ones
-  * quantization: the format's distortion floor). */
-final case class JpegEncode(child: Expression)
-    extends UnaryExpression with BinaryInput {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_jpeg_encode"
-
-  override def nullSafeEval(input: Any): Any =
-    JpegCodec.encodeJpegGray(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.JpegCodec.encodeJpegGray($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** binary payload → bigint 60-bit difference-hash (native). */
-final case class DHash60(child: Expression)
-    extends UnaryExpression with BinaryInput {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_dhash60"
-
-  override def nullSafeEval(input: Any): Any =
-    Sketches.dhash60(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.Sketches.dhash60($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** string text → array<bigint> [score_milli, n_grams]: hashed-trigram
-  * linear-model inference (native). `weights` is a Seq (not Array) so
-  * case-class equality is element-wise — identical calls are
-  * canonically equal and whole-stage codegen's common-subexpression
-  * elimination computes the kernel once per row even when a query
-  * projects both array slots. */
-final case class NgramScore(child: Expression, weights: Seq[Long])
-    extends UnaryExpression {
-  require(weights.nonEmpty, "graft_ngram_score: empty weight table")
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${t.simpleString}")
-  }
-  override def dataType: DataType = ArrayType(LongType)
-  override def prettyName: String = "graft_ngram_score"
-
-  @transient private lazy val wArr: Array[Long] = weights.toArray
-
-  override def nullSafeEval(input: Any): Any =
-    Sketches.ngramScoreMilli(input.asInstanceOf[UTF8String], wArr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val wRef = ctx.addReferenceObj("ngramWeights", wArr, "long[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.Sketches.ngramScoreMilli($c, $wRef);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** binary payload → array<bigint> distinct landmark audio
-  * fingerprints (native, scan-stage row-local). */
-final case class AudioFp(child: Expression, frameBytes: Int, fanout: Int,
-    maxDt: Int, qDiv: Int)
-    extends UnaryExpression with BinaryInput {
-  require(frameBytes > 0 && fanout > 0 && maxDt > 0 && qDiv > 0,
-    "graft_audio_fp: all parameters must be positive")
-  override def dataType: DataType = ArrayType(LongType)
-  override def prettyName: String = "graft_audio_fp"
-
-  override def nullSafeEval(input: Any): Any =
-    Sketches.audioFp(input.asInstanceOf[Array[Byte]], frameBytes, fanout,
-      maxDt, qDiv)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.Sketches.audioFp($c, $frameBytes, " +
-        s"$fanout, $maxDt, $qDiv);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** array<string> tokens → bigint simhash (native). */
-final case class SimHash64(child: Expression)
-    extends UnaryExpression with StringArrayInput {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash64"
-
-  override def nullSafeEval(input: Any): Any =
-    Sketches.simhash64(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.Sketches.simhash64($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** string → struct<n_chars bigint, n_distinct_chars bigint,
-  * s decimal(38,6)> char-entropy statistics (native, scan-stage
-  * row-local; see [[Sketches.charEntropyStats]] for the exactness
-  * contract vs the per-char explode + SUM formulation it replaces). */
-final case class CharEntropyStats(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${t.simpleString}")
-  }
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", LongType, nullable = false),
-    StructField("nd", LongType, nullable = false),
-    StructField("s", DecimalType(38, 6), nullable = true)))
-  override def prettyName: String = "graft_char_entropy"
-
-  override def nullSafeEval(input: Any): Any =
-    Sketches.charEntropyStats(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.Sketches.charEntropyStats($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -328,24 +328,6 @@ object Streaming {
         count(when(col("click_id").isNull, 1)).as("n_purchase_only"))
   }
 
-  /** Run a (bounded) streaming frame to completion into a memory table
-    * and return the result. AvailableNow processes everything currently
-    * in the source, then stops — batch-parity semantics for testing the
-    * exact code that would run live.
-    *
-    * Stateful micro-batches pay per-partition state-store open/commit
-    * every batch; at the small-batch sizes these bounded runs see, the
-    * batch-side shuffle.partitions setting leaves stores under-filled
-    * (measured ~2× on 500k-row batches). The query runs under the
-    * session's `graft.stream.shufflePartitions` (default 8) — results
-    * are partition-count-invariant, only the state-store fan-out
-    * changes. StreamExecution clones the session conf synchronously
-    * inside start(), so the set→restore window pins the stream's
-    * partitioning for its whole life — but the session-level mutation IS
-    * briefly visible to other threads on the same session, hence the
-    * `synchronized` (serializes concurrent runToMemory calls); batch
-    * work that must plan concurrently should run on its own
-    * `newSession()`. */
   /** Streaming drift monitor: per event-time window, the PSI of the
     * live `value` distribution against a static BASELINE period — the
     * continuous version of [[graft.operators.Profile.psiDrift]]
@@ -755,6 +737,24 @@ object Streaming {
     spark.read.parquet(bad)
   }
 
+  /** Run a (bounded) streaming frame to completion into a memory table
+    * and return the result. AvailableNow processes everything currently
+    * in the source, then stops — batch-parity semantics for testing the
+    * exact code that would run live.
+    *
+    * Stateful micro-batches pay per-partition state-store open/commit
+    * every batch; at the small-batch sizes these bounded runs see, the
+    * batch-side shuffle.partitions setting leaves stores under-filled
+    * (measured ~2× on 500k-row batches). The query runs under the
+    * session's `graft.stream.shufflePartitions` (default 8) — results
+    * are partition-count-invariant, only the state-store fan-out
+    * changes. StreamExecution clones the session conf synchronously
+    * inside start(), so the set→restore window pins the stream's
+    * partitioning for its whole life — but the session-level mutation IS
+    * briefly visible to other threads on the same session, hence the
+    * `synchronized` (serializes concurrent runToMemory calls); batch
+    * work that must plan concurrently should run on its own
+    * `newSession()`. */
   def runToMemory(spark: SparkSession, df: DataFrame, name: String,
       mode: OutputMode): DataFrame = {
     val q = spark.synchronized {

@@ -137,6 +137,20 @@ class ClusterSpec extends SparkSpec {
     assert(run(df.repartition(5)) == out)
   }
 
+  test("gramAgg raises on a NULL element, where the SQL form skips its products") {
+    val df = spark.sql("SELECT array(1.0d, CAST(NULL AS DOUBLE)) AS v")
+    val e = intercept[Exception](
+      df.agg(graft.plans.GraftFunctions.gramAgg(spark, col("v"))).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+    assert(msgs.exists(_.contains("graft_gram_agg: null element at index 1")), e)
+    // the SQL form: the NULL product drops out of the (0, 1) sum
+    val sql = df.selectExpr(
+      "SUM(CAST(ROUND(v[0] * v[0], 9) AS DECIMAL(38,9))) AS g00",
+      "SUM(CAST(ROUND(v[0] * v[1], 9) AS DECIMAL(38,9))) AS g01").head()
+    assert(sql.getDecimal(0).doubleValue == 1.0 && sql.isNullAt(1))
+  }
+
   test("centroidDrift: identical halves score 1, orthogonal halves 0") {
     val df = Seq(
       (0L, Array(1.0f, 2.0f), "a"), (1L, Array(1.0f, 2.0f), "a"),

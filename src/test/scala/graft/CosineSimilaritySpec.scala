@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.Vectors
 import graft.plans.GraftFunctions
 
 class CosineSimilaritySpec extends SparkSpec {
@@ -16,7 +15,7 @@ class CosineSimilaritySpec extends SparkSpec {
   test("native cosine is bit-identical to the higher-order-function form") {
     val out = vecs.select(
       GraftFunctions.cosine(spark, col("a"), col("b")).as("native"),
-      Vectors.cosine(col("a"), col("b")).as("hof")).collect()
+      SketchReferences.cosine(col("a"), col("b")).as("hof")).collect()
     out.foreach { r =>
       assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ==
         java.lang.Double.doubleToLongBits(r.getDouble(1)))

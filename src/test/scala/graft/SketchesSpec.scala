@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.Hashes
 import graft.plans.GraftFunctions
 
 /** Native sketch expressions must reproduce the HOF reference forms
@@ -17,8 +16,8 @@ class SketchesSpec extends SparkSpec {
 
   test("native minhash equals the HOF md5 formulation exactly") {
     val both = toks
-      .select(Hashes.shingles("w", 3).as("sh"))
-      .select(Hashes.minhashSignature("sh", 16).as("hof"),
+      .select(SketchReferences.shingles("w", 3).as("sh"))
+      .select(SketchReferences.minhashSignature("sh", 16).as("hof"),
         GraftFunctions.minhashSig(spark, col("sh"), 16).as("native"))
       .collect()
     both.foreach { r =>
@@ -28,7 +27,7 @@ class SketchesSpec extends SparkSpec {
 
   test("native simhash equals the HOF xxhash64 formulation exactly") {
     val both = toks
-      .select(Hashes.simhash("w").as("hof"),
+      .select(SketchReferences.simhash("w").as("hof"),
         GraftFunctions.simhash64(spark, col("w")).as("native"))
       .collect()
     both.foreach(r => assert(r.getLong(0) == r.getLong(1)))

@@ -2152,12 +2152,12 @@ class TxnSpec extends SparkSpec {
     import org.apache.spark.unsafe.types.UTF8String
     val buf = new Array[Byte](8192 / 8)
     (0 until 1000).foreach(i =>
-      Bloom.addUtf8(buf, UTF8String.fromString(s"u-$i"), 7))
+      Bloom.add(buf, UTF8String.fromString(s"u-$i"), 7))
     assert((0 until 1000).forall(i =>
-      Bloom.mightContainUtf8(buf, UTF8String.fromString(s"u-$i"), 7)),
+      Bloom.mightContain(buf, UTF8String.fromString(s"u-$i"), 7)),
       "false negative — the prune would silently drop live rows")
     val fp = (100000 until 110000).count(i =>
-      Bloom.mightContainUtf8(buf, UTF8String.fromString(s"u-$i"), 7))
+      Bloom.mightContain(buf, UTF8String.fromString(s"u-$i"), 7))
     assert(fp < 1000, s"false-positive rate degenerate: $fp / 10000")
   }
 }
