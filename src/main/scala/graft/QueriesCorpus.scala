@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.Corpus
+import graft.operators.{Corpus, Dedup}
 
 /** §2.D corpus-assembly queries: document chunking, sequence packing,
   * weighted source mixing, export sharding — the stages that turn a
@@ -85,16 +85,11 @@ object QueriesCorpus {
     // pack (doc, idx) into one long so the per-shard prefix-sum stays
     // a pure window over a unique monotone key
     "corpus_chunk_pack" -> ((s, d) => {
-      import org.apache.spark.sql.functions.shiftleft
       val chunks = Corpus.chunkTokens(documents(s, d), "doc_id", "text",
           chunkSize = 32, stride = 16)
         .select(
-          when(col("doc_id") < 0L || col("doc_id") >= (1L << 43) ||
-               col("chunk_idx").cast("long") >= (1L << 20),
-            expr("raise_error('corpus_chunk_pack: id out of packable range')")
-              .cast("long"))
-            .otherwise(shiftleft(col("doc_id"), 20)
-              .bitwiseOR(col("chunk_idx").cast("long"))).as("cid"),
+          Dedup.pack(col("doc_id"), col("chunk_idx"), "corpus_chunk_pack: id")
+            .as("cid"),
           col("chunk_text"))
       Corpus.packSequences(chunks, "cid", "chunk_text",
         budgetTokens = 256, shards = 8)

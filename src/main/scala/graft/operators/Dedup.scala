@@ -23,13 +23,16 @@ import graft.plans.GraftFunctions
   *    the candidate join key-equality too, and (like minhash) bands run
   *    over one representative per distinct text — duplicate multiplicity
   *    never reaches a band bucket.
-  *  - N-gram Jaccard: inverted-index join (explode n-grams → join on the
-  *    gram), so cost is Σ posting-list², not N². The pair stream is
-  *    generated through a shuffled hash join (posting lists are narrow
-  *    and uniform; hash beats sort-merge ~2× here) and partial-aggregated
-  *    map-side. For Zipfian corpora use [[ngramJaccardPairsPrefix]]: the
-  *    rarest-first PPJoin prefix keeps stopword-gram posting lists out of
-  *    candidate generation, with an optional hard `maxDf` guard.
+  *  - N-gram Jaccard and containment: inverted-index join (explode
+  *    n-grams → join on the gram), so cost is Σ posting-list², not N².
+  *    The posting self-join carries no hint — AQE picks shuffled-hash
+  *    or sort-merge from runtime sizes — and the per-pair count is
+  *    partial-aggregated map-side. For Zipfian corpora use the
+  *    `…Prefix` forms: the rarest-first PPJoin prefix keeps
+  *    stopword-gram posting lists out of candidate generation, with an
+  *    optional hard `maxDf` guard. All four forms are one of two cores
+  *    ([[plainPairCounts]], [[prefixPairCounts]]) plus one of two
+  *    result rules, over [[pack]]ed (doc id, gram count) keys.
   *  - Embedding pairs: banded hyperplane-LSH candidate generation (band
   *    equi-join, never all-pairs) + exact-cosine rerank; the all-pairs
   *    form survives only as a spec-level recall verifier
@@ -130,29 +133,21 @@ object Dedup {
     *
     * Scale: chunking multiplies rows by ~len/stride but each chunk
     * sketch is O(chunkSize); everything downstream is the gid-collapsed
-    * banded pipeline — never all-pairs. The chunk id packs
-    * (doc_id, chunk_idx) into one long (doc < 2^43, idx < 2^20, the
-    * posting-pack contract; raise-guarded).
+    * banded pipeline — never all-pairs. The chunk id [[pack]]s
+    * (doc_id, chunk_idx) into one long.
     *
     * @return (doc_a, doc_b, n_chunk_pairs, max_est) with doc_a < doc_b. */
   def chunkDupPairs(df: DataFrame, idCol: String, textCol: String,
       chunkSize: Int = 32, stride: Int = 16, shingleK: Int = 3,
       perms: Int = 16, bands: Int = 4, minMatches: Int = 4): DataFrame = {
     val chunks = Corpus.chunkTokens(df, idCol, textCol, chunkSize, stride)
-      .select(
-        when(col("doc_id").cast("long").isNull ||
-             col("doc_id").cast("long") < 0L ||
-             col("doc_id").cast("long") >= (1L << 43) ||
-             col("chunk_idx").cast("long") >= (1L << 20),
-          expr("raise_error('chunkDupPairs: doc_id/chunk_idx out of packable range')")
-            .cast("long"))
-          .otherwise(shiftleft(col("doc_id").cast("long"), 20)
-            .bitwiseOR(col("chunk_idx").cast("long"))).as("ck"),
+      .select(pack(col("doc_id"), col("chunk_idx"),
+          "chunkDupPairs: doc_id/chunk_idx").as("ck"),
         col("chunk_text"))
     val pairs = minhashPairs(chunks, "ck", "chunk_text",
       shingleK, perms, bands, minMatches)
-    val da = shiftrightunsigned(col("doc_a"), 20)
-    val db = shiftrightunsigned(col("doc_b"), 20)
+    val da = packHi(col("doc_a"))
+    val db = packHi(col("doc_b"))
     pairs
       .where(da =!= db)
       .select(least(da, db).as("doc_a"), greatest(da, db).as("doc_b"),
@@ -446,36 +441,244 @@ object Dedup {
       .select(col("id").as("doc_id"), col("cluster_id"))
   }
 
+  /** The packed key codec: every (id, low) pair graft folds into one
+    * long — an n-gram posting's (doc id, distinct-gram count), a
+    * chunk's (doc id, chunk index), a frame's (media id, frame index) —
+    * is `id << 20 | lo` with 0 ≤ id < 2^43 and lo < 2^20, so the key
+    * orders like (id, lo) and one long carries both halves through a
+    * shuffle or an aggregate key. `hi` casts to LONG before the guard
+    * and the shift (an IntegerType id would otherwise wrap inside
+    * shiftleft at 2^11 with the 2^43 guard never firing). A NULL,
+    * negative or too-large id, or a `lo` ≥ 2^20, raises
+    * "`what` out of packable range", `what` naming the caller. */
+  private[graft] def pack(hi: Column, lo: Column, what: String): Column = {
+    val id = hi.cast("long")
+    val low = lo.cast("long")
+    when(id.isNull || id < 0L || id >= (1L << 43) || low >= (1L << 20),
+      expr(s"raise_error('$what out of packable range')").cast("long"))
+      .otherwise(shiftleft(id, 20).bitwiseOR(low))
+  }
+
+  /** The id half of a [[pack]]ed key. */
+  private[graft] def packHi(key: Column): Column = shiftrightunsigned(key, 20)
+
+  /** The low 20 bits of a [[pack]]ed key. */
+  private[graft] def packLo(key: Column): Column =
+    key.bitwiseAND(lit((1L << 20) - 1))
+
+  /** n_g of a posting join side's packed key (`a.pk` / `b.pk`). */
+  private def sideLo(side: String): Column = packLo(col(s"$side.pk"))
+
+  /** Default per-gram document-frequency BUDGET for the plain Σdf²
+    * forms ([[ngramJaccardPairs]]/[[ngramContainmentPairs]]): at
+    * df = 10⁵ one gram alone feeds ~5·10⁹ rows into the pair
+    * aggregate — already a cluster-burner, and far past anything the
+    * gate fixtures or BenchZipf (df ≤ corpus size ≤ 2·10⁴) produce. */
+  private[graft] val plainFormDfBudget = 100000L
+
+  /** RUNTIME guard on a posting table against Zipfian blowup: the
+    * plain forms' pair stream is Σ df(gram)² rows, so one ubiquitous
+    * gram past the budget dominates the whole job (BenchZipf measures
+    * the superlinear slope). Completing anyway is the wrong outcome at
+    * 100 TB — fail LOUDLY naming the offending df and the PPJoin
+    * `…Prefix` variant (the oracle-pinned scale path), the
+    * [[Er.fuzzyMatchPairs]] maxBlock discipline applied to posting
+    * lists. The df count rides the postings' own gk partitioning
+    * (map-side-combinable aggregate, no new shuffle); the over-budget
+    * set joins back broadcast — empty on the happy path, and the raise
+    * fires before the Σdf² join can execute. */
+  private def guardPostings(part: DataFrame, dfBudget: Long,
+      who: String): DataFrame = {
+    require(dfBudget > 0, s"$who: dfBudget must be positive")
+    val over = part.groupBy("gk").agg(count(lit(1)).as("__df"))
+      .where(col("__df") > dfBudget)
+    part.join(broadcast(over), Seq("gk"), "left")
+      .select(
+        when(col("__df").isNotNull,
+          expr(s"raise_error(concat('$who: a gram posting list has df=', " +
+            s"CAST(__df AS STRING), ', over the dfBudget=$dfBudget guard " +
+            s"— Zipfian corpus; use ${who}Prefix with maxDf (the capped, " +
+            s"oracle-pinned scale path) or raise dfBudget'))")
+            .cast("long"))
+          .otherwise(col("pk")).as("pk"),
+        col("gk"))
+  }
+
+  /** The inverted-index core of the plain n-gram forms: per-doc
+    * distinct gram keys → one (pk, gk) posting row per gram → df guard
+    * → posting self-join on `gk` with `a.pk < b.pk` (plus `prune`, an
+    * extra predicate over the `a`/`b` sides) → one count per pair.
+    * Returns (pa, pb, inter) over packed keys `pk = id << 20 | n_g`.
+    *
+    * The pair stream is Σdf² rows, so every byte per row and every
+    * post-aggregate join is paid millions of times. Two compactions:
+    * (1) the join key is one 64-bit hash of (group, gram) from
+    * [[graft.plans.Sketches.gramKeys]] — one native call per doc that
+    * tokenizes, shingles, dedupes and hashes — and a collision altering
+    * an intersection count is ~1e-16; (2) each posting row carries
+    * (id, n_g) in ONE [[pack]]ed long, so the pair aggregate's group
+    * keys hold both gram-set sizes and no result rule needs a re-join
+    * against a per-doc counts table. The pack evaluates once per DOC on
+    * the pre-explode row, and `size(gh) >= 1` keeps exactly the docs
+    * with ≥ n tokens. a.pk < b.pk ⟺ a.id < b.id: the id occupies the
+    * high bits, and a doc's own rows compare equal, which < excludes.
+    *
+    * The self-join carries NO join hint: a forced non-spillable hash
+    * build on an unbounded posting self-join is an OOM at Zipf scale.
+    * Both sides are O(corpus), so neither may ever broadcast — but
+    * Catalyst's post-explode sizeInBytes UNDERESTIMATES (explode keeps
+    * the child's byte estimate), which statically selects exactly that
+    * broadcast on small-looking inputs. Declaring the gk partitioning
+    * pins the join to the shuffle it needs anyway (same exchange,
+    * nothing added) and moves hash-vs-merge to AQE, which decides from
+    * RUNTIME sizes: shuffled-hash only when every build partition
+    * genuinely fits (maxShuffledHashJoinLocalMapThreshold, GraftSession
+    * config), spillable sort-merge otherwise. */
+  private def plainPairCounts(df: DataFrame, idCol: String, textCol: String,
+      groupCol: String, n: Int, dfBudget: Long, who: String,
+      prune: Option[Column]): DataFrame = {
+    val posting = df
+      .select(col(idCol).cast("long").as("id"),
+        GraftFunctions.gramKeys(df.sparkSession, col(groupCol), col(textCol),
+          n).as("gh"))
+      .where(size(col("gh")) >= 1)
+      .select(pack(col("id"), size(col("gh")), s"$who: id/n_g").as("pk"),
+        explode(col("gh")).as("gk"))
+    val part = guardPostings(posting.repartition(col("gk")), dfBudget, who)
+    val on = col("a.gk") === col("b.gk") && col("a.pk") < col("b.pk")
+    part.as("a").join(part.as("b"), prune.fold(on)(on && _))
+      .groupBy(col("a.pk").as("pa"), col("b.pk").as("pb"))
+      .agg(count(lit(1)).as("inter"))
+  }
+
+  /** The PPJoin prefix core of the `…Prefix` forms: string shingle
+    * postings keyed by (grp, gram) → the (grp, gram) df table, capped
+    * at `maxDf` when given → each doc's grams ranked rarest-first by
+    * (gdf, gram) → the prefix rnk ≤ n_g − ⌈t·n_g⌉ + 1 → `candidates`,
+    * the caller's join of the prefix (`a`) against the prefix or the
+    * full ranked posting (`b`) → exact verification. Returns
+    * (pa, pb, inter) over packed keys, one row per distinct candidate.
+    *
+    * The (gdf, gram) string order and the ceil over a round-9 guard
+    * (an exactly-integer t·n must not straddle an ulp between the
+    * prune and the final ratio filter) are what the `_capped` gate
+    * keys' DuckDB oracles mirror verbatim, pinning the candidate set.
+    * pk order is id order, so `a.pk < b.pk` pins the same pairs as the
+    * oracles' `a.doc_id < b.doc_id`.
+    *
+    * Verification is exact, COUNT-shaped and CANDIDATE-proportional:
+    * the full UNCAPPED posting (a capped gram still counts toward a
+    * generated candidate's true intersection) is semi-join-trimmed to
+    * candidate docs, each pair's a-side grams equi-join b's on the
+    * composite (doc, gram) key, and one count per pair is |A∩B|. Cost
+    * is Σ_cand n_a — never a posting self-join, never a gram-array
+    * re-attach (an array_intersect verify builds unspillable hash
+    * relations; it OOM'd at sf0.1 on an 8 GiB heap). No join hints:
+    * AQE picks shuffle-hash only when a build side genuinely fits, and
+    * sort-merge spills otherwise. Intersections count equal
+    * xxhash64(grp|gram) keys, as the plain core does. */
+  private def prefixPairCounts(df: DataFrame, idCol: String, textCol: String,
+      groupCol: String, n: Int, t: Double, maxDf: Option[Long], who: String)(
+      candidates: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val posting = df
+      .select(col(idCol).cast("long").as("id"), col(groupCol).as("grp"),
+        TextAnalysis.tokens(col(textCol)).as("w"))
+      .where(size(col("w")) >= n)
+      .select(col("id"), col("grp"),
+        GraftFunctions.shingles(df.sparkSession, col("w"), n).as("g"))
+      .select(pack(col("id"), size(col("g")), s"$who: id/n_g").as("pk"),
+        col("grp"), explode(col("g")).as("gram"))
+    val gramDf = posting.groupBy("grp", "gram").agg(count(lit(1)).as("gdf"))
+    val capped = maxDf.fold(gramDf)(m => gramDf.where(col("gdf") <= m))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("pk").orderBy(col("gdf").asc, col("gram").asc)
+    def gk = xxhash64(concat_ws("|", col("grp"), col("gram"))).as("gk")
+    // ONE ranked posting feeds both join sides, so they can never
+    // disagree on gram order
+    val ranked = posting
+      .join(capped, Seq("grp", "gram"))
+      .withColumn("rnk", row_number().over(w))
+      .select(col("pk"), col("rnk"), gk)
+    val prefix = ranked.where(col("rnk") <=
+      packLo(col("pk")) - ceil(round(packLo(col("pk")) * t, 9)) + 1)
+    val cand = candidates(prefix, ranked)
+      .select(col("a.pk").as("pa"), col("b.pk").as("pb"))
+      .distinct()
+    val vposting = posting.select(col("pk"), gk)
+    val vpA = vposting.join(
+      cand.select(col("pa").as("pk")).distinct(), Seq("pk"), "left_semi")
+    val vpB = vposting.join(
+      cand.select(col("pb").as("pk")).distinct(), Seq("pk"), "left_semi")
+    cand
+      .join(vpA.as("a"), col("pa") === col("a.pk"))
+      .select(col("pa"), col("pb"), col("a.gk").as("agk"))
+      .join(vpB.as("b"),
+        col("pb") === col("b.pk") && col("agk") === col("b.gk"))
+      .groupBy(col("pa"), col("pb"))
+      .agg(count(lit(1)).as("inter"))
+  }
+
+  /** PPJoin's positional bound on a candidate collision at prefix
+    * ranks (a.rnk, b.rnk): the grams the two docs can still share from
+    * there on cannot exceed min(n_a − rnk_a, n_b − rnk_b) + 1, so the
+    * pair survives only if that covers the `required` overlap. */
+  private def positionalBound(required: Column): Column =
+    least(sideLo("a") - col("a.rnk"), sideLo("b") - col("b.rnk")) + 1 >=
+      required
+
+  /** The lossless Jaccard size-ratio prune: jac ≥ t implies
+    * inter ≥ t·union, and inter ≤ min(n_a, n_b), union ≥ max(n_a, n_b),
+    * so min/max ≥ t. Dropping pairs that fail it loses no pair with
+    * jac ≥ t, but cuts the pair stream feeding the count. */
+  private def sizeRatioPrune(t: Double): Column =
+    least(sideLo("a"), sideLo("b")).cast("double") /
+      greatest(sideLo("a"), sideLo("b")) >= t
+
+  /** The Jaccard result rule over (pa, pb, inter) pair counts:
+    * jac = inter / (n_a + n_b − inter) from the packed sizes, kept at
+    * ≥ t and rounded to 4 places. */
+  private def jaccardRows(inter: DataFrame, t: Double): DataFrame =
+    inter
+      .select(packHi(col("pa")).as("doc_a"), packHi(col("pb")).as("doc_b"),
+        (col("inter").cast("double") /
+          (packLo(col("pa")) + packLo(col("pb")) - col("inter"))).as("jac"))
+      .where(col("jac") >= t)
+      .select(col("doc_a"), col("doc_b"),
+        expr("CAST(ROUND(jac, 4) AS DOUBLE)").as("jaccard"))
+
+  /** The directed containment result rule over (pa, pb, inter) pair
+    * counts: both directions C = inter / n_src explode out of the ONE
+    * undirected count (a union of two projections would plan the join
+    * and the count twice), kept at ≥ t and rounded to 4 places. */
+  private def containmentRows(inter: DataFrame, t: Double): DataFrame = {
+    def directed(src: String, dst: String): Column =
+      struct(col(src).as("src"), col(dst).as("dst"),
+        (col("inter").cast("double") / packLo(col(src))).as("c"))
+    inter.select(explode(array(directed("pa", "pb"), directed("pb", "pa")))
+        .as("d"))
+      .select(col("d.src").as("src"), col("d.dst").as("dst"),
+        col("d.c").as("c"))
+      .where(col("c") >= t)
+      .select(packHi(col("src")).as("src_doc"),
+        packHi(col("dst")).as("dst_doc"),
+        expr("CAST(ROUND(c, 4) AS DOUBLE)").as("containment"))
+  }
+
   /** Exact n-gram Jaccard via AllPairs/PPJoin prefix filtering: order
     * every doc's grams rarest-first (global doc-frequency), keep only
     * the prefix of length n_g − ceil(t·n_g) + 1 for candidate
     * generation — any pair with jac ≥ t must collide inside both
     * prefixes. A positional bound tightens generation further (PPJoin):
     * a collision at prefix ranks (i, j) can still reach overlap
-    * ⌈t/(1+t)·(na+nb)⌉ only if min(na−i, nb−j)+1 covers it. Same
-    * result set as the inverted-index count (equality spec in
-    * DedupSpec), with one shared caveat: BOTH forms count |A∩B| by
-    * equality of xxhash64(grp|gram) keys, so a 64-bit collision
-    * between distinct grams in one group could inflate an
-    * intersection (P ≈ pairs·2⁻⁶⁴ — negligible, but "exact" here
-    * means exact-over-hashed-grams, unlike the replaced
-    * array_intersect verify which compared gram strings).
-    *
-    * Verification is exact, COUNT-shaped, and candidate-proportional
-    * (the same discipline as [[ngramContainmentPairsPrefix]], ported in
-    * r10): each candidate pair expands to the a-side doc's UNCAPPED
-    * gram hashes, equi-joined against b's grams on the composite
-    * (doc, gram) key; one count per pair is the true |A∩B|, and the
-    * Jaccard denominator needs no re-join because each side's gram
-    * count rides in the packed key (`id << 20 | n_g`, the
-    * [[ngramJaccardPairs]] contract — ids must be numeric in
-    * [0, 2^43), output `doc_a`/`doc_b` are BIGINT). Cost is Σ_cand n_a
-    * — never a posting self-join, never a gram-array re-attach (r8's
-    * array_intersect verify built unspillable `LongHashedRelation`s and
-    * OOM'd at sf0.1 on an 8 GiB heap; the r9 Jaccard form kept that
-    * shape and three forced shuffle_hash hints — removed here). No join
-    * hints anywhere in this form: AQE picks shuffle-hash only when a
-    * build side genuinely fits, and sort-merge spills otherwise.
+    * ⌈t/(1+t)·(na+nb)⌉ only if min(na−i, nb−j)+1 covers it; the
+    * size-ratio prune of the plain form applies too. Same result set
+    * as [[ngramJaccardPairs]] (property spec in DedupSpec), with one
+    * shared caveat: BOTH forms count |A∩B| by equality of
+    * xxhash64(grp|gram) keys, so a 64-bit collision between distinct
+    * grams in one group could inflate an intersection (P ≈ pairs·2⁻⁶⁴
+    * — negligible, but "exact" here means exact-over-hashed-grams).
+    * Verification and the packing contract: [[prefixPairCounts]],
+    * [[ngramJaccardPairs]].
     *
     * `maxDf` is the document-frequency guard for Zipfian corpora: grams
     * with df > maxDf never enter candidate generation. The rarest-first
@@ -495,204 +698,32 @@ object Dedup {
     * the query entry uses the inverted-index form. */
   def ngramJaccardPairsPrefix(df: DataFrame, idCol: String, textCol: String,
       groupCol: String, n: Int = 2, minJaccard: Double = 0.3,
-      maxDf: Option[Long] = None): DataFrame = {
-    val spark = df.sparkSession
-    val grams = df
-      .select(col(idCol).cast("long").as("id"), col(groupCol).as("grp"),
-        TextAnalysis.tokens(col(textCol)).as("w"))
-      .where(size(col("w")) >= n)
-      .select(col("id"), col("grp"),
-        GraftFunctions.shingles(spark, col("w"), n).as("g"))
-    val posting = grams
-      .select(
-        when(col("id").isNull || col("id") < 0L || col("id") >= (1L << 43) ||
-             size(col("g")).cast("long") >= (1L << 20),
-          expr("raise_error('ngramJaccardPairsPrefix: id/n_g out of packable range')")
-            .cast("long"))
-          .otherwise(shiftleft(col("id"), 20)
-            .bitwiseOR(size(col("g")).cast("long"))).as("pk"),
-        col("grp"), explode(col("g")).as("gram"))
-    val gramDf = posting.groupBy("grp", "gram").agg(count(lit(1)).as("gdf"))
-    val capped = maxDf.fold(gramDf)(t => gramDf.where(col("gdf") <= t))
-    def ng(c: Column): Column = c.bitwiseAND(lit((1L << 20) - 1))
-    // ceil over a round-9 guard (same discipline as the containment
-    // form): an exactly-integer t·n must not straddle an ulp between
-    // the prune and the final ratio filter — and the capped gate's
-    // DuckDB oracle mirrors this arithmetic verbatim
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("pk").orderBy(col("gdf").asc, col("gram").asc)
-    val ranked = posting
-      .join(capped, Seq("grp", "gram"))
-      .withColumn("rnk", row_number().over(w))
-      .select(col("pk"), col("rnk"),
-        xxhash64(concat_ws("|", col("grp"), col("gram"))).as("gk"))
-    val prefix = ranked.where(col("rnk") <=
-      ng(col("pk")) - ceil(round(ng(col("pk")) * minJaccard, 9)) + 1)
-    // pk order == id order (one posting row-group per doc, id in the
-    // high bits), so a.pk < b.pk pins the same candidate set as the
-    // oracle's a.doc_id < b.doc_id
-    val cand = prefix.as("a")
-      .join(prefix.as("b"),
+      maxDf: Option[Long] = None): DataFrame =
+    jaccardRows(prefixPairCounts(df, idCol, textCol, groupCol, n, minJaccard,
+      maxDf, "ngramJaccardPairsPrefix") { (prefix, _) =>
+      prefix.as("a").join(prefix.as("b"),
         col("a.gk") === col("b.gk") && col("a.pk") < col("b.pk") &&
-          least(ng(col("a.pk")), ng(col("b.pk"))).cast("double") /
-            greatest(ng(col("a.pk")), ng(col("b.pk"))) >= minJaccard &&
-          least(ng(col("a.pk")) - col("a.rnk"),
-              ng(col("b.pk")) - col("b.rnk")) + 1 >=
-            ceil(round((ng(col("a.pk")) + ng(col("b.pk"))) *
-              (minJaccard / (1 + minJaccard)), 9)))
-      .select(col("a.pk").as("pa"), col("b.pk").as("pb"))
-      .distinct()
-    // exact verification, count-shaped and CANDIDATE-proportional: the
-    // full UNCAPPED posting (a capped gram still counts toward a
-    // generated candidate's true intersection) is semi-join-trimmed to
-    // candidate docs, then each pair's a-side grams equi-join b's on
-    // the composite (doc, gram) key — one count per pair is |A∩B|
-    val vposting = posting.select(col("pk"),
-      xxhash64(concat_ws("|", col("grp"), col("gram"))).as("gk"))
-    val vpA = vposting.join(
-      cand.select(col("pa").as("pk")).distinct(), Seq("pk"), "left_semi")
-    val vpB = vposting.join(
-      cand.select(col("pb").as("pk")).distinct(), Seq("pk"), "left_semi")
-    val inter = cand
-      .join(vpA.as("a"), col("pa") === col("a.pk"))
-      .select(col("pa"), col("pb"), col("a.gk").as("agk"))
-      .join(vpB.as("b"),
-        col("pb") === col("b.pk") && col("agk") === col("b.gk"))
-      .groupBy(col("pa"), col("pb"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .select(col("pa"), col("pb"),
-        (col("inter").cast("double") /
-          (ng(col("pa")) + ng(col("pb")) - col("inter"))).as("jac"))
-      .where(col("jac") >= minJaccard)
-      .select(shiftrightunsigned(col("pa"), 20).as("doc_a"),
-        shiftrightunsigned(col("pb"), 20).as("doc_b"),
-        expr("CAST(ROUND(jac, 4) AS DOUBLE)").as("jaccard"))
-  }
+          sizeRatioPrune(minJaccard) &&
+          positionalBound(ceil(round((sideLo("a") + sideLo("b")) *
+            (minJaccard / (1 + minJaccard)), 9))))
+    }, minJaccard)
 
-  /** Default per-gram document-frequency BUDGET for the plain Σdf²
-    * forms ([[ngramJaccardPairs]]/[[ngramContainmentPairs]]): at
-    * df = 10⁵ one gram alone feeds ~5·10⁹ rows into the pair
-    * aggregate — already a cluster-burner, and far past anything the
-    * gate fixtures or BenchZipf (df ≤ corpus size ≤ 2·10⁴) produce. */
-  private[graft] val plainFormDfBudget = 100000L
-
-  /** RUNTIME guard on a posting table against Zipfian blowup: the
-    * plain forms' pair stream is Σ df(gram)² rows, so one ubiquitous
-    * gram past the budget dominates the whole job (BenchZipf measures
-    * the superlinear slope; r8's OOM was this shape). Completing
-    * anyway is the wrong outcome at 100 TB — fail LOUDLY naming the
-    * offending df and the PPJoin `_capped` variant (the oracle-pinned
-    * scale path), the [[Er.fuzzyMatchPairs]] maxBlock discipline
-    * applied to posting lists. The df count rides the postings' own
-    * gk partitioning (map-side-combinable aggregate, no new shuffle);
-    * the over-budget set joins back broadcast — empty on the happy
-    * path, and the raise fires before the Σdf² join can execute. */
-  private def guardPostings(part: DataFrame, dfBudget: Long, who: String,
-      alt: String): DataFrame = {
-    require(dfBudget > 0, s"$who: dfBudget must be positive")
-    val over = part.groupBy("gk").agg(count(lit(1)).as("__df"))
-      .where(col("__df") > dfBudget)
-    part.join(broadcast(over), Seq("gk"), "left")
-      .select(
-        when(col("__df").isNotNull,
-          expr(s"raise_error(concat('$who: a gram posting list has df=', " +
-            s"CAST(__df AS STRING), ', over the dfBudget=$dfBudget guard " +
-            s"— Zipfian corpus; use $alt with maxDf (the capped, " +
-            s"oracle-pinned scale path) or raise dfBudget'))")
-            .cast("long"))
-          .otherwise(col("pk")).as("pk"),
-        col("gk"))
-  }
-
-  /** Exact n-gram Jaccard similarity via inverted-index join.
+  /** Exact n-gram Jaccard similarity via inverted-index join: the
+    * plain core ([[plainPairCounts]]) with the lossless size-ratio
+    * prune as its extra join predicate, then the Jaccard rule.
     *
-    * The pair stream is Σdf² rows, so every byte per row and every
-    * post-aggregate join is paid millions of times. Two compactions:
-    * (1) the join key is one 64-bit hash of (group, gram) — long
-    * equality beats a two-column string compare, and a collision
-    * altering an intersection count is ~1e-16 (and would be caught by
-    * the oracle hash-compare); (2) each posting row packs (id, n_g)
-    * into ONE long (`id << 20 | n_g`), so the pair aggregate's group
-    * keys carry both gram-set sizes and the Jaccard denominator needs
-    * NO re-join against a per-doc counts table — two whole joins gone.
-    * Requires a numeric id with 0 <= id < 2^43 and n_g < 2^20; the
-    * id casts to LONG before the guard and the shift (an IntegerType
-    * id would otherwise wrap inside shiftleft at 2^11 with the 2^43
-    * guard never firing), and the guard+pack evaluate once per DOC on
-    * the pre-explode gram rows, not per posting row.
-    *
-    * CONTRACT (changed in r4 when the packed key replaced the re-join):
-    * `doc_a`/`doc_b` are always BIGINT — the ids are unpacked with
-    * shiftrightunsigned, NOT the input id type — and non-numeric or
-    * negative ids, which the pre-r4 form accepted, now raise. Callers
-    * needing the original id type re-join on the BIGINT ids or cast;
-    * string ids first map through a dense numeric id (zipWithIndex-style
+    * Requires a numeric id with 0 <= id < 2^43 and n_g < 2^20 (the
+    * [[pack]] contract). `doc_a`/`doc_b` are always BIGINT — the ids
+    * are unpacked from the packed key, NOT carried in the input id
+    * type — and non-numeric or negative ids raise. Callers needing the
+    * original id type re-join on the BIGINT ids or cast; string ids
+    * first map through a dense numeric id (zipWithIndex-style
     * dictionary), which at corpus scale they should already have. */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
       groupCol: String, n: Int = 2, minJaccard: Double = 0.3,
-      dfBudget: Long = plainFormDfBudget): DataFrame = {
-    val spark = df.sparkSession
-    // fused posting build (r17): tokenize→shingle→dedupe→key-hash in
-    // ONE native kernel call per doc — replaces the interpreted
-    // split/filter HOF chain, the per-gram explode of STRING rows, and
-    // the per-posting-row concat_ws+xxhash64. Values are identical by
-    // construction (see Sketches.gramKeys); size(gh) is the same
-    // distinct-gram count size(g) carried, and `size(gh) >= 1` keeps
-    // exactly the docs `size(tokens) >= n` kept (≥ n tokens ⟺ ≥ 1
-    // gram; NULL text → NULL gh → dropped either way).
-    val grams = df
-      .select(col(idCol).cast("long").as("id"),
-        GraftFunctions.gramKeys(spark, col(groupCol), col(textCol), n)
-          .as("gh"))
-      .where(size(col("gh")) >= 1)
-    val posting = grams
-      .select(
-        when(col("id").isNull || col("id") < 0L || col("id") >= (1L << 43) ||
-             size(col("gh")).cast("long") >= (1L << 20),
-          expr("raise_error('ngramJaccardPairs: id/n_g out of packable range')")
-            .cast("long"))
-          .otherwise(shiftleft(col("id"), 20)
-            .bitwiseOR(size(col("gh")).cast("long"))).as("pk"),
-        explode(col("gh")).as("gk"))
-    // a.pk < b.pk ⟺ a.id < b.id: id occupies the high bits, and equal
-    // ids (same doc, same n_g) compare equal, which < excludes.
-    // lossless prune: jac >= t implies inter >= t·union, and inter <=
-    // min(na,nb), union >= max(na,nb) → min/max >= t. Dropping pairs that
-    // fail the size-ratio test can't lose any pair with jac >= t, but it
-    // cuts the pair stream feeding the aggregate.
-    // NO join hint (r12; a forced shuffle_hash lived here r9-r11): a
-    // forced non-spillable hash build on an unbounded posting self-join
-    // is an OOM at Zipf scale — the r8 incident shape. Both sides are
-    // O(corpus), so neither may ever broadcast — but Catalyst's
-    // post-explode sizeInBytes UNDERESTIMATES (explode keeps the
-    // child's byte estimate), which statically selects exactly that
-    // broadcast on small-looking inputs. Declaring the gk partitioning
-    // pins the join to the shuffle it needs anyway (same exchange,
-    // nothing added) and moves hash-vs-merge to AQE, which decides
-    // from RUNTIME sizes: shuffled-hash only when every build
-    // partition genuinely fits (maxShuffledHashJoinLocalMapThreshold,
-    // GraftSession config), spillable sort-merge otherwise.
-    val part = guardPostings(posting.repartition(col("gk")), dfBudget,
-      "ngramJaccardPairs", "ngramJaccardPairsPrefix")
-    def ng(c: Column): Column = c.bitwiseAND(lit((1L << 20) - 1))
-    val inter = part.as("a")
-      .join(part.as("b"),
-        col("a.gk") === col("b.gk") &&
-          col("a.pk") < col("b.pk") &&
-          least(ng(col("a.pk")), ng(col("b.pk"))).cast("double") /
-            greatest(ng(col("a.pk")), ng(col("b.pk"))) >= minJaccard)
-      .groupBy(col("a.pk").as("pa"), col("b.pk").as("pb"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .select(shiftrightunsigned(col("pa"), 20).as("doc_a"),
-        shiftrightunsigned(col("pb"), 20).as("doc_b"),
-        (col("inter").cast("double") /
-          (ng(col("pa")) + ng(col("pb")) - col("inter"))).as("jac"))
-      .where(col("jac") >= minJaccard)
-      .select(col("doc_a"), col("doc_b"),
-        expr("CAST(ROUND(jac, 4) AS DOUBLE)").as("jaccard"))
-  }
+      dfBudget: Long = plainFormDfBudget): DataFrame =
+    jaccardRows(plainPairCounts(df, idCol, textCol, groupCol, n, dfBudget,
+      "ngramJaccardPairs", Some(sizeRatioPrune(minJaccard))), minJaccard)
 
   /** Embedding-cosine near-dup pairs via banded hyperplane LSH.
     *
@@ -1125,62 +1156,17 @@ object Dedup {
     * boilerplate-wrapped copies), which symmetric Jaccard misses
     * because the union term punishes the size gap.
     *
-    * Same inverted-index shape as the Jaccard form: per-doc distinct
-    * shingles explode to a (packed-key, gram-hash) posting table; one
-    * equi-self-join on the gram hash + count per pair computes every
-    * intersection size; both directed containments then derive from
-    * the one undirected count. No size-ratio prune exists here ON
-    * PURPOSE: for any sizes the smaller side can still be fully
-    * contained, so a Jaccard-style min/max cut would drop true pairs.
-    * Packing contract (id < 2^43, n_g < 2^20) as ngramJaccardPairs. */
+    * The same inverted-index core as the Jaccard form
+    * ([[plainPairCounts]]); both directed containments then derive from
+    * the one undirected count ([[containmentRows]]). No size-ratio
+    * prune exists here ON PURPOSE: for any sizes the smaller side can
+    * still be fully contained, so a Jaccard-style min/max cut would
+    * drop true pairs. Packing contract as [[ngramJaccardPairs]]. */
   def ngramContainmentPairs(df: DataFrame, idCol: String, textCol: String,
       groupCol: String, n: Int = 2, minContainment: Double = 0.8,
-      dfBudget: Long = plainFormDfBudget): DataFrame = {
-    val spark = df.sparkSession
-    // fused posting build — same r17 kernel as ngramJaccardPairs (see
-    // the contract note there; values identical by construction)
-    val grams = df
-      .select(col(idCol).cast("long").as("id"),
-        GraftFunctions.gramKeys(spark, col(groupCol), col(textCol), n)
-          .as("gh"))
-      .where(size(col("gh")) >= 1)
-    val posting = grams
-      .select(
-        when(col("id").isNull || col("id") < 0L || col("id") >= (1L << 43) ||
-             size(col("gh")).cast("long") >= (1L << 20),
-          expr("raise_error('ngramContainmentPairs: id/n_g out of packable range')")
-            .cast("long"))
-          .otherwise(shiftleft(col("id"), 20)
-            .bitwiseOR(size(col("gh")).cast("long"))).as("pk"),
-        explode(col("gh")).as("gk"))
-    def ng(c: Column): Column = c.bitwiseAND(lit((1L << 20) - 1))
-    // hint-free + declared gk partitioning (r12), for the same reason
-    // as ngramJaccardPairs: the posting self-join must stay spillable
-    // at Zipf scale and must never broadcast off a post-explode
-    // underestimate
-    val part = guardPostings(posting.repartition(col("gk")), dfBudget,
-      "ngramContainmentPairs", "ngramContainmentPairsPrefix")
-    val inter = part.as("a")
-      .join(part.as("b"),
-        col("a.gk") === col("b.gk") && col("a.pk") < col("b.pk"))
-      .groupBy(col("a.pk").as("pa"), col("b.pk").as("pb"))
-      .agg(count(lit(1)).as("inter"))
-    // both directed containments explode out of the ONE undirected
-    // count — the previous union-of-two-projections form planned (and
-    // at sf0.1 executed) the join+aggregate twice
-    val directed = inter.select(explode(array(
-        struct(col("pa").as("src"), col("pb").as("dst"),
-          (col("inter").cast("double") / ng(col("pa"))).as("c")),
-        struct(col("pb").as("src"), col("pa").as("dst"),
-          (col("inter").cast("double") / ng(col("pb"))).as("c"))))
-        .as("d"))
-      .select(col("d.src").as("src"), col("d.dst").as("dst"),
-        col("d.c").as("c"))
-    directed.where(col("c") >= minContainment)
-      .select(shiftrightunsigned(col("src"), 20).as("src_doc"),
-        shiftrightunsigned(col("dst"), 20).as("dst_doc"),
-        expr("CAST(ROUND(c, 4) AS DOUBLE)").as("containment"))
-  }
+      dfBudget: Long = plainFormDfBudget): DataFrame =
+    containmentRows(plainPairCounts(df, idCol, textCol, groupCol, n,
+      dfBudget, "ngramContainmentPairs", None), minContainment)
 
   /** EXACT SUBSTRING dedup (Lee et al. 2022, "Deduplicating Training
     * Data Makes Language Models Better", ExactSubstr): remove every
@@ -1255,24 +1241,16 @@ object Dedup {
     * rides along free: C(b→a) ≥ t from the larger side forces
     * inter ≥ t·n_b ≥ t·n_a, so every qualifying pair — either
     * direction — collides inside the smaller side's prefix. Candidate
-    * generation therefore joins prefix(smaller) × full posting, keyed
-    * smaller-side (ties on the packed key), with the positional bound
-    * min(n_a − rnk_a, n_b − rnk_b) + 1 ≥ ⌈t·n_a⌉: ranks are positions
-    * in the shared rarest-first (df, gram) order, so grams common from
-    * (rnk_a, rnk_b) onward cannot exceed that min (capped-out hot grams
-    * are ≤ n − capped_rank by construction, keeping the bound valid
-    * under maxDf). Verification is exact, COUNT-shaped, and
-    * candidate-proportional: each candidate pair expands to the a-side
-    * doc's (uncapped) gram hashes, equi-joined against b's grams on the
-    * composite (doc, gram) key; one count per pair is the true |A∩B|.
-    * Cost is Σ_cand n_a — never a posting self-join, never a gram-array
-    * re-attach (r8's array_intersect verify built unspillable hash
-    * relations and OOM'd at sf0.1 on an 8 GiB heap). No join hints
-    * anywhere in this form: AQE picks shuffle-hash only when a build
-    * side genuinely fits, and sort-merge spills otherwise. Every
-    * emitted pair carries
-    * true values and, with `maxDf = None`, the result set EQUALS
-    * [[ngramContainmentPairs]] (equality spec in DedupSpec).
+    * generation therefore joins prefix(smaller) × full ranked posting,
+    * keyed smaller-side (ties on the packed key), with the positional
+    * bound min(n_a − rnk_a, n_b − rnk_b) + 1 ≥ ⌈t·n_a⌉: ranks are
+    * positions in the shared rarest-first (df, gram) order, so grams
+    * common from (rnk_a, rnk_b) onward cannot exceed that min
+    * (capped-out hot grams are ≤ n − capped_rank by construction,
+    * keeping the bound valid under maxDf). Verification is the exact
+    * count of [[prefixPairCounts]]; every emitted pair carries true
+    * values and, with `maxDf = None`, the result set EQUALS
+    * [[ngramContainmentPairs]] (property spec in DedupSpec).
     *
     * `maxDf` is the same lossy opt-in dial as on
     * [[ngramJaccardPairsPrefix]]: grams with df > maxDf never generate
@@ -1282,84 +1260,15 @@ object Dedup {
     * head of the gram distribution out of the join entirely. */
   def ngramContainmentPairsPrefix(df: DataFrame, idCol: String,
       textCol: String, groupCol: String, n: Int = 2,
-      minContainment: Double = 0.8, maxDf: Option[Long] = None): DataFrame = {
-    val spark = df.sparkSession
-    val grams = df
-      .select(col(idCol).cast("long").as("id"), col(groupCol).as("grp"),
-        TextAnalysis.tokens(col(textCol)).as("w"))
-      .where(size(col("w")) >= n)
-      .select(col("id"), col("grp"),
-        GraftFunctions.shingles(spark, col("w"), n).as("g"))
-    val posting = grams
-      .select(
-        when(col("id").isNull || col("id") < 0L || col("id") >= (1L << 43) ||
-             size(col("g")).cast("long") >= (1L << 20),
-          expr("raise_error('ngramContainmentPairsPrefix: id/n_g out of packable range')")
-            .cast("long"))
-          .otherwise(shiftleft(col("id"), 20)
-            .bitwiseOR(size(col("g")).cast("long"))).as("pk"),
-        col("grp"), explode(col("g")).as("gram"))
-    val gramDf = posting.groupBy("grp", "gram").agg(count(lit(1)).as("gdf"))
-    val capped = maxDf.fold(gramDf)(t => gramDf.where(col("gdf") <= t))
-    def ng(c: Column): Column = c.bitwiseAND(lit((1L << 20) - 1))
-    // required intersection for C ≥ t from a doc of n grams, derived
-    // the SAME way on every path (prefix cutoff, positional bound):
-    // ceil over a round-9 guard so an exactly-integer t·n can't
-    // straddle an ulp between the prune and the final ratio filter
-    def reqd(c: Column): Column = ceil(round(ng(c) * lit(minContainment), 9))
-    // ONE ranked posting feeds both join sides: the prefix (probe) side
-    // filters it, so the two sides can never disagree on gram order
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("pk").orderBy(col("gdf").asc, col("gram").asc)
-    val ranked = posting
-      .join(capped, Seq("grp", "gram"))
-      .withColumn("rnk", row_number().over(w))
-      .select(col("pk"), col("rnk"),
-        xxhash64(concat_ws("|", col("grp"), col("gram"))).as("gk"))
-    val prefix = ranked
-      .where(col("rnk") <= ng(col("pk")) - reqd(col("pk")) + 1)
-    val cand = prefix.as("a")
-      .join(ranked.as("b"),
+      minContainment: Double = 0.8, maxDf: Option[Long] = None): DataFrame =
+    containmentRows(prefixPairCounts(df, idCol, textCol, groupCol, n,
+      minContainment, maxDf, "ngramContainmentPairsPrefix") { (prefix, ranked) =>
+      prefix.as("a").join(ranked.as("b"),
         col("a.gk") === col("b.gk") &&
-          (ng(col("a.pk")) < ng(col("b.pk")) ||
-            (ng(col("a.pk")) === ng(col("b.pk")) &&
-              col("a.pk") < col("b.pk"))) &&
-          least(ng(col("a.pk")) - col("a.rnk"),
-              ng(col("b.pk")) - col("b.rnk")) + 1 >=
-            reqd(col("a.pk")))
-      .select(col("a.pk").as("pa"), col("b.pk").as("pb"))
-      .distinct()
-    // exact verification, count-shaped and CANDIDATE-proportional: each
-    // candidate pair expands to the a-side doc's gram hashes (full
-    // UNCAPPED posting — a capped gram still counts toward a generated
-    // candidate's true intersection), which then equi-join b's grams on
-    // the composite (doc, gram) key; one count per pair is the true
-    // |A∩B|. Cost is Σ_cand n_a rows — proportional to the candidate
-    // set, never a posting self-join — and gram arrays never re-attach,
-    // so there is no unspillable hash build and no per-candidate
-    // array_intersect (r8's OOM)
-    val vposting = posting.select(col("pk"),
-      xxhash64(concat_ws("|", col("grp"), col("gram"))).as("gk"))
-    val vpA = vposting.join(
-      cand.select(col("pa").as("pk")).distinct(), Seq("pk"), "left_semi")
-    val vpB = vposting.join(
-      cand.select(col("pb").as("pk")).distinct(), Seq("pk"), "left_semi")
-    val inter = cand
-      .join(vpA.as("a"), col("pa") === col("a.pk"))
-      .select(col("pa"), col("pb"), col("a.gk").as("agk"))
-      .join(vpB.as("b"),
-        col("pb") === col("b.pk") && col("agk") === col("b.gk"))
-      .groupBy(col("pa"), col("pb"))
-      .agg(count(lit(1)).as("inter"))
-    val directed = inter.select(col("pa").as("src"), col("pb").as("dst"),
-        (col("inter").cast("double") / ng(col("pa"))).as("c"))
-      .unionByName(inter.select(col("pb").as("src"), col("pa").as("dst"),
-        (col("inter").cast("double") / ng(col("pb"))).as("c")))
-    directed.where(col("c") >= minContainment)
-      .select(shiftrightunsigned(col("src"), 20).as("src_doc"),
-        shiftrightunsigned(col("dst"), 20).as("dst_doc"),
-        expr("CAST(ROUND(c, 4) AS DOUBLE)").as("containment"))
-  }
+          (sideLo("a") < sideLo("b") ||
+            (sideLo("a") === sideLo("b") && col("a.pk") < col("b.pk"))) &&
+          positionalBound(ceil(round(sideLo("a") * lit(minContainment), 9))))
+    }, minContainment)
 
   /** Incremental embedding near-dup: probe a FRESH ingest batch against
     * the existing corpus — banded hyperplane LSH candidates strictly

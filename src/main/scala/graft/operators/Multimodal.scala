@@ -268,8 +268,7 @@ object Multimodal {
     * similar — reuse detection cares about cross-doc matches).
     *
     * The banding unit id packs (doc, frame) into ONE long
-    * (`id << 20 | frame_idx` — the dedup_ngram packing contract:
-    * id < 2^43, frame_idx < 2^20, range-checked), so the whole
+    * ([[Dedup.pack]]: `id << 20 | frame_idx`, range-checked), so the whole
     * rep-collapsed [[Dedup.bandedSketchStages]] machinery applies
     * unchanged: identical frames (stills, repeated intros) collapse
     * to one banding row no matter how many documents carry them.
@@ -295,21 +294,16 @@ object Multimodal {
         expr(s"substring(payload, fidx * $frameBytes + 1, $frameBytes)")
           .as("frame"))
     val sigs = frames.select(
-      when(col("mid").isNull || col("mid") < 0L ||
-           col("mid") >= (1L << 43) || col("fidx") >= (1 << 20),
-        expr("raise_error('frameNearDupPairs: id/frame_idx out of packable range')")
-          .cast("long"))
-        .otherwise(shiftleft(col("mid").cast("long"), 20)
-          .bitwiseOR(col("fidx").cast("long"))).as("id"),
+      Dedup.pack(col("mid"), col("fidx"), "frameNearDupPairs: id/frame_idx")
+        .as("id"),
       md5(col("frame")).as("gid"),
       graft.plans.GraftFunctions.phash60(spark, col("frame")).as("simhash"))
     Dedup.expandSketchPairs(Dedup.bandedSketchStages(sigs, maxHamming))
-      .where(shiftrightunsigned(col("doc_a"), 20) =!=
-        shiftrightunsigned(col("doc_b"), 20))
-      .select(shiftrightunsigned(col("doc_a"), 20).as("id_a"),
-        col("doc_a").bitwiseAND(lit((1L << 20) - 1)).cast("int").as("frame_a"),
-        shiftrightunsigned(col("doc_b"), 20).as("id_b"),
-        col("doc_b").bitwiseAND(lit((1L << 20) - 1)).cast("int").as("frame_b"),
+      .where(Dedup.packHi(col("doc_a")) =!= Dedup.packHi(col("doc_b")))
+      .select(Dedup.packHi(col("doc_a")).as("id_a"),
+        Dedup.packLo(col("doc_a")).cast("int").as("frame_a"),
+        Dedup.packHi(col("doc_b")).as("id_b"),
+        Dedup.packLo(col("doc_b")).cast("int").as("frame_b"),
         col("hamming"))
   }
 

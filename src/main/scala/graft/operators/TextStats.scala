@@ -210,7 +210,8 @@ object TextStats {
     * shuffle — the inverted index is keyed by the 128-bit n-gram hash,
     * never the text — then one count per hash and one doc-keyed
     * roll-up. Docs shorter than `n` tokens emit no n-grams and are
-    * absent from the output (both engines agree). */
+    * absent from the output (both engines agree). `idCol` must be
+    * unique among the docs that yield n-grams: a repeated id raises. */
   def duplicateNgramFraction(df: DataFrame, idCol: String,
       textCol: String, n: Int = 5): DataFrame = {
     require(n >= 2, s"n must be >= 2, got $n")
@@ -226,14 +227,25 @@ object TextStats {
       .select(col(idCol).as("doc_id"),
         graft.plans.GraftFunctions.md5GramSet(df.sparkSession,
           col(textCol), n).as("gs"))
-      .where(size(col("gs")) >= 1)
-      .select(col("doc_id"), explode(col("gs")).as("g"))
+      // n_g before the explode: taken in the explode's own select, the
+      // plan carries the whole array on every gram row to size it
+      .select(col("doc_id"), size(col("gs")).as("n_g"), col("gs"))
+      .where(col("n_g") >= 1)
+      .select(col("doc_id"), col("n_g"), explode(col("gs")).as("g"))
     val docsPerGram = grams.groupBy("g")
       .agg(count(lit(1)).as("nd")) // grams is (doc_id,g)-distinct
+    // a doc_id on two rows would count its grams twice in `nd`, so a
+    // gram unique to it reads as duplicated: such an id collects more
+    // gram rows than its smallest row's n_g, and raises
     grams.join(docsPerGram, "g")
       .groupBy("doc_id")
-      .agg(count(lit(1)).cast("long").as("n_ngrams"),
+      .agg(count(lit(1)).cast("long").as("n_ngrams"), min(col("n_g")).as("n_g"),
         expr("CAST(ROUND(SUM(CASE WHEN nd >= 2 THEN 1 ELSE 0 END) " +
           "/ CAST(COUNT(*) AS DOUBLE), 4) AS DOUBLE)").as("dup_frac"))
+      .select(col("doc_id"),
+        when(col("n_ngrams") =!= col("n_g"), expr("raise_error(" +
+          "'duplicateNgramFraction: a doc_id repeats; ids must be unique')")
+          .cast("long")).otherwise(col("n_ngrams")).as("n_ngrams"),
+        col("dup_frac"))
   }
 }

@@ -124,7 +124,13 @@ object GraftFunctions {
     }
   }
 
-  /** Native dot product. */
+  /** Native dot product. NULL contract (shared with [[cosine]] and
+    * [[lshBucket]]): a NULL array gives NULL, but a NULL ELEMENT reads
+    * as 0.0 and two arrays of different lengths are read up to the
+    * shorter one — the result is a primitive double per row, so unlike
+    * the `aggregate(zip_with(…))` SQL form neither case gives NULL:
+    * `dot([1, 2, 3], [1, 2])` = 5.0. Filter or `coalesce` NULL elements
+    * and check lengths upstream where that matters. */
   def dot(spark: SparkSession, a: Column, b: Column): Column =
     call(DotName, a, b)()
 
@@ -157,7 +163,8 @@ object GraftFunctions {
   def vecDigest(spark: SparkSession, vec: Column): Column =
     call(VecDigestName, vec.cast("array<double>"))()
 
-  /** Native hyperplane-LSH bucket column. */
+  /** Native hyperplane-LSH bucket column. A NULL element projects as
+    * 0.0 (the [[dot]] NULL contract); a NULL array gives NULL. */
   def lshBucket(spark: SparkSession, vec: Column, planes: Int = 16): Column =
     call(LshName, vec.cast("array<double>"))(planes)
 
@@ -216,7 +223,10 @@ object GraftFunctions {
     call(SimHashName, tokens)()
 
   /** Fused native cosine. No implicit coercion on the raw expression,
-    * so cast here — a no-op when the input is already array<double>. */
+    * so cast here — a no-op when the input is already array<double>.
+    * NULL elements read as 0.0 and the shorter array bounds the sums
+    * (the [[dot]] NULL contract): `cosine([1, NULL], [1, 2])` =
+    * 1/√5 ≈ 0.4472, not NULL. */
   def cosine(spark: SparkSession, a: Column, b: Column): Column =
     call(CosineName, a.cast("array<double>"), b.cast("array<double>"))()
 

@@ -195,6 +195,137 @@ class DedupSpec extends SparkSpec {
     assert(out == Set((100000L, 200000L)))
   }
 
+  test("pack: the guard names its caller; in-range keys round-trip through packHi/packLo") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    def packed(rows: Seq[(java.lang.Long, Long)]) = rows.toDF("id", "lo")
+      .select(Dedup.pack(col("id"), col("lo"), "packSpec: id/lo").as("k"))
+      .select(col("k"), Dedup.packHi(col("k")), Dedup.packLo(col("k")))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    Seq[(java.lang.Long, Long)]((null, 0L), (-1L, 0L), (1L << 43, 0L),
+        (5L, 1L << 20)).foreach { bad =>
+      val ex = intercept[Exception](packed(Seq(bad)))
+      assert(ex.getMessage.contains("packSpec: id/lo out of packable range"),
+        s"$bad: ${ex.getMessage}")
+    }
+    val good = for {
+      id <- Seq(0L, 1L, 2047L, 123456789L, (1L << 43) - 1)
+      lo <- Seq(0L, 1L, (1L << 20) - 1)
+    } yield (id, lo)
+    val keys = packed(good.map { case (id, lo) => (Long.box(id), lo) })
+    assert(keys.map(k => (k._2, k._3)).toSeq == good)
+    // the key orders like (id, lo)
+    assert(keys.map(_._1).toSeq.sorted == keys.map(_._1).toSeq)
+  }
+
+  test("pack guard: every packing operator raises on an unpackable id, naming itself") {
+    import spark.implicits._
+    val text = "the quick brown fox jumps over the lazy dog"
+    def docs(id: java.lang.Long) = Seq[(java.lang.Long, String, String)](
+      (1L, text, "en"), (id, text, "en")).toDF("doc_id", "text", "lang")
+    def raises(what: String)(run: => Any): Unit = {
+      val ex = intercept[Exception](run)
+      assert(ex.getMessage.contains(s"$what out of packable range"), ex.getMessage)
+    }
+    raises("ngramJaccardPairs: id/n_g")(Dedup.ngramJaccardPairs(docs(-1L),
+      "doc_id", "text", "lang").collect())
+    raises("ngramJaccardPairsPrefix: id/n_g")(Dedup.ngramJaccardPairsPrefix(
+      docs(1L << 43), "doc_id", "text", "lang").collect())
+    raises("ngramContainmentPairs: id/n_g")(Dedup.ngramContainmentPairs(
+      docs(null), "doc_id", "text", "lang").collect())
+    raises("ngramContainmentPairsPrefix: id/n_g")(
+      Dedup.ngramContainmentPairsPrefix(docs(-1L), "doc_id", "text", "lang")
+        .collect())
+    raises("chunkDupPairs: doc_id/chunk_idx")(Dedup.chunkDupPairs(docs(-1L),
+      "doc_id", "text").collect())
+    val media = graft.operators.Multimodal.attachBinary(
+      Seq((1L, text), (-1L, text)).toDF("doc_id", "text"), "doc_id", "text")
+    raises("frameNearDupPairs: id/frame_idx")(
+      graft.operators.Multimodal.frameNearDupPairs(media).collect())
+  }
+
+  test("four n-gram pair forms equal an in-memory set computation; capped runs are sound") {
+    import spark.implicits._
+    import org.scalacheck.{Gen, Prop, Test}
+    // a tiny mixed-case vocabulary (the forms lowercase) makes shared and
+    // repeated tokens, equal gram-set sizes and exact ratio boundaries
+    // common; a group's copies are identical docs (jac = C = 1.0, the
+    // size ratio exactly 1); texts below n tokens yield no grams
+    val text = for {
+      k <- Gen.choose(0, 6)
+      ws <- Gen.listOfN(k, Gen.oneOf("a", "b", "c", "d", "A", "e"))
+      sep <- Gen.oneOf(" ", "  ")
+    } yield ws.mkString(sep)
+    val group = for {
+      texts <- Gen.choose(2, 5).flatMap(Gen.listOfN(_, text))
+      copies <- Gen.someOf(texts)
+    } yield texts ++ copies
+    // pairs never cross groups, so one run checks 12 independent corpora
+    // of 2-4 groups each, stacked under distinct group names
+    val stacked = for {
+      corpora <- Gen.listOfN(12, Gen.choose(2, 4).flatMap(Gen.listOfN(_, group)))
+      seed <- Gen.long
+    } yield {
+      val rows = for {
+        (groups, c) <- corpora.zipWithIndex
+        (texts, g) <- groups.zipWithIndex
+        t <- texts
+      } yield (s"c$c-g$g", t)
+      // unique ids spread over the whole packable range, in random order
+      val rnd = new scala.util.Random(seed)
+      val ids = Iterator.continually(rnd.nextLong() & ((1L << 43) - 1))
+        .distinct.take(rows.size - 1).toSeq :+ ((1L << 43) - 1)
+      rnd.shuffle(ids).zip(rows).map { case (id, (grp, t)) => (id, grp, t) }
+    }
+    def grams(t: String, n: Int): Set[String] = {
+      val w = t.toLowerCase.split(" ").filter(_.nonEmpty)
+      if (w.length < n) Set.empty else w.sliding(n).map(_.mkString(" ")).toSet
+    }
+    def r4(x: Double) =
+      BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    def same(label: String, got: Set[(Long, Long, Double)],
+        want: Set[(Long, Long, Double)]): Prop =
+      Prop(got == want) :| s"$label: missing ${want -- got}, extra ${got -- want}"
+    // exact boundaries: at t = 0.5 a 1-of-2 or 2-of-4 overlap, at 0.75
+    // 3-of-4, at 1.0 identical gram sets
+    for ((n, t) <- Seq((2, 0.5), (3, 0.5), (2, 1.0), (3, 0.75))) {
+      val prop = Prop.forAllNoShrink(stacked) { docs =>
+        val g = docs.map { case (id, grp, txt) => (id, grp, grams(txt, n)) }
+          .filter(_._3.nonEmpty)
+        val overlaps = for {
+          (a, ga, sa) <- g; (b, gb, sb) <- g
+          if ga == gb && a != b && (sa & sb).nonEmpty
+        } yield (a, b, (sa & sb).size, sa.size, sb.size)
+        val jac = overlaps.collect { case (a, b, i, na, nb)
+          if a < b && i.toDouble / (na + nb - i) >= t =>
+            (a, b, r4(i.toDouble / (na + nb - i))) }.toSet
+        val con = overlaps.collect { case (a, b, i, na, _)
+          if i.toDouble / na >= t => (a, b, r4(i.toDouble / na)) }.toSet
+        val df = docs.toDF("doc_id", "lang", "text")
+        val cappedJ = rows(Dedup.ngramJaccardPairsPrefix(df, "doc_id", "text",
+          "lang", n, t, maxDf = Some(2L)))
+        val cappedC = rows(Dedup.ngramContainmentPairsPrefix(df, "doc_id",
+          "text", "lang", n, t, maxDf = Some(2L)))
+        same("jaccard", rows(Dedup.ngramJaccardPairs(df, "doc_id", "text",
+            "lang", n, t)), jac) &&
+          same("jaccard prefix", rows(Dedup.ngramJaccardPairsPrefix(df,
+            "doc_id", "text", "lang", n, t)), jac) &&
+          same("containment", rows(Dedup.ngramContainmentPairs(df, "doc_id",
+            "text", "lang", n, t)), con) &&
+          same("containment prefix", rows(Dedup.ngramContainmentPairsPrefix(df,
+            "doc_id", "text", "lang", n, t)), con) &&
+          Prop(cappedJ.subsetOf(jac)) :| s"capped jaccard extra ${cappedJ -- jac}" &&
+          Prop(cappedC.subsetOf(con)) :| s"capped containment extra ${cappedC -- con}"
+      }
+      val result = Test.check(
+        Test.Parameters.default.withMinSuccessfulTests(1).withWorkers(1), prop)
+      assert(result.passed,
+        s"n=$n t=$t: " + org.scalacheck.util.Pretty.pretty(result))
+    }
+  }
+
   test("deltaMinhash crosses sides only and agrees with the full pairing") {
     import spark.implicits._
     val mk = (id: Long, base: String) => (id, base)

@@ -408,4 +408,19 @@ class KernelContractSpec extends SparkSpec {
     assert(one(s"transform(graft_md5_gram_set($bad, 1), g -> lower(hex(g)))") ==
       one(s"transform(filter(split($bad, ' '), t -> t <> ''), g -> md5(g))"))
   }
+
+  test("NULL contract: vector kernels read a NULL element as 0.0 and stop at the shorter vector") {
+    val s = spark.newSession()
+    GraftFunctions.register(s)
+    def one(sql: String): Any = s.sql(s"SELECT $sql").head().get(0)
+    assert(one("ROUND(graft_cosine(array(1.0d, NULL), array(1.0d, 2.0d)), 4)") == 0.4472)
+    assert(one("graft_dot(array(1.0d, 2.0d, 3.0d), array(1.0d, 2.0d))") == 5.0)
+    assert(one("graft_dot(array(1.0d, NULL), array(4.0d, 5.0d))") == 4.0)
+    assert(one("graft_lsh_bucket(array(1.0d, NULL, -2.0d), 16)") ==
+      one("graft_lsh_bucket(array(1.0d, 0.0d, -2.0d), 16)"))
+    // only a NULL array gives NULL
+    assert(one("graft_dot(CAST(NULL AS ARRAY<DOUBLE>), array(1.0d))") == null)
+    assert(one("graft_cosine(array(1.0d), CAST(NULL AS ARRAY<DOUBLE>))") == null)
+    assert(one("graft_lsh_bucket(CAST(NULL AS ARRAY<DOUBLE>), 4)") == null)
+  }
 }

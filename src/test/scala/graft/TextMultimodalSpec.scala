@@ -455,6 +455,24 @@ class TextMultimodalSpec extends SparkSpec {
     assert(!out.contains(4L))
   }
 
+  test("duplicateNgramFraction: a repeated doc_id raises; unique ids keep their values") {
+    val unique = Seq((1L, "a b c d e f"), (2L, "a b c d e zz"), (3L, "p q r s t"))
+    def run(rows: Seq[(Long, String)]) = graft.operators.TextStats
+      .duplicateNgramFraction(rows.toDF("doc_id", "text"), "doc_id", "text", n = 5)
+      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
+    assert(run(unique) == Map(1L -> ((2L, 0.5)), 2L -> ((2L, 0.5)), 3L -> ((1L, 0.0))))
+    // doc 3 again, same text and other text: without the guard its
+    // unique 5-gram would read as duplicated (dup_frac 1.0)
+    Seq("p q r s t", "u v w x y z").foreach { again =>
+      val ex = intercept[Exception](run(unique :+ ((3L, again))))
+      assert(ex.getMessage.contains("duplicateNgramFraction: a doc_id repeats"),
+        ex.getMessage)
+    }
+    // a repeated id whose other row is shorter than n yields no gram: no
+    // gram is counted twice, so it passes
+    assert(run(unique :+ ((3L, "x y"))) == run(unique))
+  }
+
   test("duplicateNgramFraction: within-doc repeats are not contamination") {
     // doc repeats its own 5-gram twice but shares nothing cross-doc
     val df = Seq((1L, "a b c d e a b c d e"), (2L, "k l m n o"))
