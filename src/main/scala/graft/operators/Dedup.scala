@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{Hashes, TextAnalysis, Vectors}
 import graft.plans.GraftFunctions
@@ -476,25 +477,23 @@ object Dedup {
     * gate fixtures or BenchZipf (df ≤ corpus size ≤ 2·10⁴) produce. */
   private[graft] val plainFormDfBudget = 100000L
 
-  /** RUNTIME guard on a posting table against Zipfian blowup: the
-    * plain forms' pair stream is Σ df(gram)² rows, so one ubiquitous
-    * gram past the budget dominates the whole job (BenchZipf measures
-    * the superlinear slope). Completing anyway is the wrong outcome at
-    * 100 TB — fail LOUDLY naming the offending df and the PPJoin
-    * `…Prefix` variant (the oracle-pinned scale path), the
-    * [[Er.fuzzyMatchPairs]] maxBlock discipline applied to posting
-    * lists. The df count rides the postings' own gk partitioning
-    * (map-side-combinable aggregate, no new shuffle); the over-budget
-    * set joins back broadcast — empty on the happy path, and the raise
-    * fires before the Σdf² join can execute. */
+  /** RUNTIME guard against Zipfian blowup: the plain forms' pair stream
+    * is Σ df(gram)² rows, so one gram past the budget dominates the job
+    * (BenchZipf measures the superlinear slope). Rather than complete at
+    * 100 TB, fail LOUDLY naming the df and the PPJoin `…Prefix` variant
+    * (the oracle-pinned scale path): [[Er.fuzzyMatchPairs]]'s maxBlock
+    * discipline on posting lists. The same df drops df = 1 grams
+    * losslessly (a lone posting pairs only with itself, which
+    * `a.pk < b.pk` discards). It is one window count over the gk
+    * exchange both join sides reuse, sorted as a sort-merge join needs,
+    * and raises before any pair exists. */
   private def guardPostings(part: DataFrame, dfBudget: Long,
       who: String): DataFrame = {
     require(dfBudget > 0, s"$who: dfBudget must be positive")
-    val over = part.groupBy("gk").agg(count(lit(1)).as("__df"))
-      .where(col("__df") > dfBudget)
-    part.join(broadcast(over), Seq("gk"), "left")
+    part.withColumn("__df", count(lit(1)).over(Window.partitionBy("gk")))
+      .where(col("__df") >= 2)
       .select(
-        when(col("__df").isNotNull,
+        when(col("__df") > dfBudget,
           expr(s"raise_error(concat('$who: a gram posting list has df=', " +
             s"CAST(__df AS STRING), ', over the dfBudget=$dfBudget guard " +
             s"— Zipfian corpus; use ${who}Prefix with maxDf (the capped, " +
@@ -506,9 +505,10 @@ object Dedup {
 
   /** The inverted-index core of the plain n-gram forms: per-doc
     * distinct gram keys → one (pk, gk) posting row per gram → df guard
-    * → posting self-join on `gk` with `a.pk < b.pk` (plus `prune`, an
-    * extra predicate over the `a`/`b` sides) → one count per pair.
-    * Returns (pa, pb, inter) over packed keys `pk = id << 20 | n_g`.
+    * and df ≥ 2 prune → posting self-join on `gk` with `a.pk < b.pk`
+    * (plus `prune`, an extra predicate over the `a`/`b` sides) → one
+    * count per pair. Returns (pa, pb, inter) over packed keys
+    * `pk = id << 20 | n_g`.
     *
     * The pair stream is Σdf² rows, so every byte per row and every
     * post-aggregate join is paid millions of times. Two compactions:
@@ -518,22 +518,21 @@ object Dedup {
     * an intersection count is ~1e-16; (2) each posting row carries
     * (id, n_g) in ONE [[pack]]ed long, so the pair aggregate's group
     * keys hold both gram-set sizes and no result rule needs a re-join
-    * against a per-doc counts table. The pack evaluates once per DOC on
-    * the pre-explode row, and `size(gh) >= 1` keeps exactly the docs
-    * with ≥ n tokens. a.pk < b.pk ⟺ a.id < b.id: the id occupies the
-    * high bits, and a doc's own rows compare equal, which < excludes.
+    * against a per-doc counts table. The kernel runs once per doc: a
+    * plain explode lets Catalyst push its inferred `size(gh) > 0` below
+    * the projection, calling the kernel again, so explode_outer's null
+    * gk is filtered instead. a.pk < b.pk ⟺ a.id < b.id: the id occupies
+    * the high bits, and a doc's own rows compare equal, which < excludes.
     *
     * The self-join carries NO join hint: a forced non-spillable hash
     * build on an unbounded posting self-join is an OOM at Zipf scale.
-    * Both sides are O(corpus), so neither may ever broadcast — but
-    * Catalyst's post-explode sizeInBytes UNDERESTIMATES (explode keeps
-    * the child's byte estimate), which statically selects exactly that
-    * broadcast on small-looking inputs. Declaring the gk partitioning
-    * pins the join to the shuffle it needs anyway (same exchange,
-    * nothing added) and moves hash-vs-merge to AQE, which decides from
-    * RUNTIME sizes: shuffled-hash only when every build partition
-    * genuinely fits (maxShuffledHashJoinLocalMapThreshold, GraftSession
-    * config), spillable sort-merge otherwise. */
+    * Explode keeps its child's byte estimate, so the static plan is a
+    * broadcast hash join over the gk exchange. AQE re-plans from RUNTIME
+    * sizes: it keeps the broadcast only while the build side is under
+    * spark.sql.autoBroadcastJoinThreshold, else joins the gk partitions
+    * as shuffled-hash when every build partition fits
+    * (maxShuffledHashJoinLocalMapThreshold, GraftSession config) and as
+    * spillable sort-merge otherwise. */
   private def plainPairCounts(df: DataFrame, idCol: String, textCol: String,
       groupCol: String, n: Int, dfBudget: Long, who: String,
       prune: Option[Column]): DataFrame = {
@@ -541,9 +540,10 @@ object Dedup {
       .select(col(idCol).cast("long").as("id"),
         GraftFunctions.gramKeys(df.sparkSession, col(groupCol), col(textCol),
           n).as("gh"))
-      .where(size(col("gh")) >= 1)
+      .select(col("id"), col("gh"), explode_outer(col("gh")).as("gk"))
+      .where(col("gk").isNotNull)
       .select(pack(col("id"), size(col("gh")), s"$who: id/n_g").as("pk"),
-        explode(col("gh")).as("gk"))
+        col("gk"))
     val part = guardPostings(posting.repartition(col("gk")), dfBudget, who)
     val on = col("a.gk") === col("b.gk") && col("a.pk") < col("b.pk")
     part.as("a").join(part.as("b"), prune.fold(on)(on && _))
@@ -590,8 +590,7 @@ object Dedup {
         col("grp"), explode(col("g")).as("gram"))
     val gramDf = posting.groupBy("grp", "gram").agg(count(lit(1)).as("gdf"))
     val capped = maxDf.fold(gramDf)(m => gramDf.where(col("gdf") <= m))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("pk").orderBy(col("gdf").asc, col("gram").asc)
+    val w = Window.partitionBy("pk").orderBy(col("gdf").asc, col("gram").asc)
     def gk = xxhash64(concat_ws("|", col("grp"), col("gram"))).as("gk")
     // ONE ranked posting feeds both join sides, so they can never
     // disagree on gram order
@@ -964,8 +963,7 @@ object Dedup {
         val byNid = duplicateClusters(numbered, "a", "b", maxIters, edgeBudget)
         val out = byNid.join(ids, col("doc_id") === col("nid"))
           .select(col("node").as("doc_id"), min(col("node")).over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(byNid("cluster_id"))).as("cluster_id"))
+            Window.partitionBy(byNid("cluster_id"))).as("cluster_id"))
           .localCheckpoint()
         Seq(e0, ids, byNid).foreach(unpersistCheckpoint)
         out
@@ -1139,8 +1137,7 @@ object Dedup {
     * same left-anti losers join; docs in no cluster pass untouched. */
   def keepBest(df: DataFrame, idCol: String, clusters: DataFrame,
       scoreCol: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("cluster_id")
+    val w = Window.partitionBy("cluster_id")
       .orderBy(col(scoreCol).desc, col("doc_id").asc)
     val losers = clusters
       .join(df.select(col(idCol).as("doc_id"), col(scoreCol)), "doc_id")

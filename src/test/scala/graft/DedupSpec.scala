@@ -944,6 +944,87 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(under == reference, "guarded plan changed the result set")
   }
+
+  test("plain core: one gram-kernel pass, the second join side reuses the posting exchange, df = 1 postings never reach the join") {
+    import org.apache.spark.sql.execution.{FilterExec, GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.execution.joins.HashJoin
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    import org.apache.spark.sql.functions.{col, explode}
+    import graft.plans.GraftFunctions
+    // a range-backed corpus: a local Seq would fold the gram kernel
+    // into the LocalTableScan at optimization time
+    val docs = spark.range(60L).selectExpr("id AS doc_id", "'en' AS lang",
+      "concat_ws(' ', 'w' || (id % 7), 'w' || (id % 5), 'w' || (id % 3), " +
+        "'w' || id) AS text")
+    val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", "lang")
+    val (cp, nJobs) = jobsOf(pairs.localCheckpoint())
+    info(s"$nJobs Spark jobs")
+    assert(nJobs <= 5, s"$nJobs jobs")
+    val got = cp.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(got.nonEmpty && got == Dedup.ngramJaccardPairsPrefix(docs,
+      "doc_id", "text", "lang").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet)
+    object stages extends AdaptiveSparkPlanHelper
+    val plan = pairs.queryExecution.executedPlan
+    val generates = stages.collect(plan) { case g: GenerateExec => g }
+    assert(generates.size == 1 &&
+      generates.head.child.toString.contains("graft_gram_keys"), plan)
+    val buildSides = stages.collect(plan) {
+      case j: HashJoin => j.right
+      case j: SortMergeJoinExec => j.right
+    }
+    assert(buildSides.size == 1, plan)
+    def reused(p: SparkPlan) =
+      stages.collect(p) { case r: ReusedExchangeExec => r }.nonEmpty
+    assert(reused(buildSides.head), plan)
+    // each join side reads only the postings of grams with df >= 2
+    val gramDf = docs.select(explode(GraftFunctions.gramKeys(spark,
+      col("lang"), col("text"), 2)).as("gk"))
+      .groupBy("gk").count().collect().map(_.getLong(1))
+    val kept = gramDf.filter(_ >= 2).sum
+    assert(kept > 0 && kept < gramDf.sum, gramDf.toSeq)
+    val dfFilters = stages.collect(plan) {
+      case f: FilterExec if f.condition.references.exists(_.name == "__df") =>
+        f.metrics("numOutputRows").value
+    }
+    assert(dfFilters.nonEmpty && dfFilters.forall(_ == kept),
+      s"$dfFilters rows out of the df filters, $kept postings with df >= 2")
+  }
+
+  test("plain forms: the df guard passes df = dfBudget and raises at dfBudget + 1; an all-unique corpus gives no pairs") {
+    def docs(texts: String*) =
+      texts.zipWithIndex.map { case (t, i) => (i.toLong, t, "en") }
+        .toDF("doc_id", "text", "lang")
+    // "aa bb" has df = 3; every other bigram of these docs has df = 1
+    val atBudget = Seq("aa bb x0 y0", "aa bb x1 y1", "aa bb x2 y2")
+    def jac(d: org.apache.spark.sql.DataFrame, budget: Long) =
+      Dedup.ngramJaccardPairs(d, "doc_id", "text", "lang", minJaccard = 0.1,
+        dfBudget = budget).collect().map(r => (r.getLong(0), r.getLong(1),
+          r.getDouble(2))).toSet
+    def con(d: org.apache.spark.sql.DataFrame, budget: Long) =
+      Dedup.ngramContainmentPairs(d, "doc_id", "text", "lang",
+        minContainment = 0.3, dfBudget = budget).collect().map(r =>
+          (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(jac(docs(atBudget: _*), 3L) ==
+      Set((0L, 1L, 0.2), (0L, 2L, 0.2), (1L, 2L, 0.2)))
+    assert(con(docs(atBudget: _*), 3L) == (for {
+      a <- 0L to 2L; b <- 0L to 2L if a != b } yield (a, b, 0.3333)).toSet)
+    // "cc dd" at df = 4 beside "aa bb" at df = 3
+    val overBudget = docs(atBudget ++ (3 to 6).map(i => s"cc dd z$i w$i"): _*)
+    for ((who, run) <- Seq[(String, () => Any)](
+        "ngramJaccardPairs" -> (() => jac(overBudget, 3L)),
+        "ngramContainmentPairs" -> (() => con(overBudget, 3L)))) {
+      val ex = intercept[Exception](run())
+      assert(ex.getMessage.contains(s"$who: a gram posting list has df=4, " +
+        "over the dfBudget=3 guard"), ex.getMessage)
+    }
+    // every gram at df = 1: no pairs and no raise, even at the
+    // smallest budget
+    val unique = docs("p0 q0 r0", "p1 q1 r1", "p2 q2", "p0")
+    assert(jac(unique, 1L).isEmpty && con(unique, 1L).isEmpty)
+  }
 }
 
 object DedupSpec {
