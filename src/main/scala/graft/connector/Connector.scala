@@ -2,6 +2,7 @@ package graft.connector
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.pipeline.Xf
+import graft.plans.OnePassUnion
 
 /** Airbyte-flavored connector protocol, re-expressed for Spark.
   *
@@ -45,6 +46,10 @@ final case class Connection(source: EtlpSource, xform: Xf, sink: EtlpSink) {
     if (!s.valid) s else sink.check(spark)
   }
   /** Run the flow; returns records written (the reference's
-    * start-job drains the pipeline channel to completion). */
-  def start(spark: SparkSession): Long = sink.write(xform(source.read(spark)))
+    * start-job drains the pipeline channel to completion). The flow's
+    * plan goes through [[OnePassUnion]] first, so union branches over a
+    * shared base (an `ErrorChannel` split, a `DagTopology` fan-in) read
+    * and parse each record once. */
+  def start(spark: SparkSession): Long =
+    sink.write(OnePassUnion.onePass(xform(source.read(spark))))
 }

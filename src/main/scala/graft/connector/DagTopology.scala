@@ -9,11 +9,14 @@ import graft.pipeline.Xf
   * channels, with mult/tap for fan-out and merged channels for fan-in).
   *
   * Here a node is either a source (produces a DataFrame) or a transform
-  * ([[Xf]]); edges declare dataflow. Fan-in is `unionByName`; fan-out is
-  * free because a DataFrame is an immutable plan that any number of
-  * downstream nodes can reference — Catalyst sees one logical plan per
-  * terminal and can reuse shuffle stages (AQE stage reuse), where the
-  * reference had to physically copy records into tapped channels.
+  * ([[Xf]]); edges declare dataflow. Fan-in is `unionByName`; fan-out
+  * is a DataFrame that any number of downstream nodes reference, where
+  * the reference physically copied records into tapped channels. Plan
+  * references are not one pass: a fan-in of two branches over one
+  * source plans that source once per branch. Run as a `Connection`
+  * (`Connection.start`), the fan-in's branches over a shared base are
+  * fused by [[graft.plans.OnePassUnion]], so the source is read once; a
+  * frame from [[output]] used directly keeps one read per branch.
   * Nothing materializes per-node: `build` is pure plan construction.
   */
 final class DagTopology private (

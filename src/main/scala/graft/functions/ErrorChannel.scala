@@ -12,9 +12,14 @@ import org.apache.spark.sql.functions._
   * Spark-first: a "channel" is a DataFrame, so the error channel is a
   * second DataFrame carved from the same plan. [[split]] evaluates the
   * success expression ONCE (deterministic, codegen'd) and routes rows:
-  * failures get the error envelope, successes flow on. Both sides share
-  * the scan — Catalyst reuses it, and at scale the split is two filters
-  * over one pass, not two jobs. Use Spark's `try_*` functions (try_cast,
+  * failures get the error envelope, successes flow on. The two sides
+  * are two plans over one base: a flow run through
+  * `Connection.start` recombines them (`records.unionByName(errors)`)
+  * in one pass, one scan and one parse per record, because
+  * [[graft.plans.OnePassUnion]] fuses the union's branches over that
+  * base. A bare `unionByName` outside a Connection, or two separate
+  * actions on `ok` and `errors`, still scans and parses the base once
+  * per side. Use Spark's `try_*` functions (try_cast,
   * try_divide, try_to_timestamp...) as the attempt expression: they
   * yield NULL on failure instead of killing the task, which is exactly
   * the per-record error capture the reference's channels provide.

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.expressions.KnownNotNull
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{Hashes, TextAnalysis, Vectors}
@@ -460,6 +461,11 @@ object Dedup {
       .otherwise(shiftleft(id, 20).bitwiseOR(low))
   }
 
+  /** `c`, marked non-null for the optimizer: for a value a filter
+    * below has already proved non-null. */
+  private def knownNotNull(c: Column): Column =
+    GraftSqlBridge.column(KnownNotNull(GraftSqlBridge.expression(c)))
+
   /** The id half of a [[pack]]ed key. */
   private[graft] def packHi(key: Column): Column = shiftrightunsigned(key, 20)
 
@@ -580,14 +586,21 @@ object Dedup {
   private def prefixPairCounts(df: DataFrame, idCol: String, textCol: String,
       groupCol: String, n: Int, t: Double, maxDf: Option[Long], who: String)(
       candidates: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    // The kernels run once per doc only if no filter is pushed below
+    // their projection: a doc of fewer than n tokens has no shingle, so
+    // explode_outer's null gram drops it (a size filter or a plain
+    // explode's inferred size(g) > 0 would be pushed down), and pk is
+    // packed past that filter and known non-null there (the joins'
+    // inferred isnotnull(pk) would be pushed down otherwise).
     val posting = df
       .select(col(idCol).cast("long").as("id"), col(groupCol).as("grp"),
-        TextAnalysis.tokens(col(textCol)).as("w"))
-      .where(size(col("w")) >= n)
-      .select(col("id"), col("grp"),
-        GraftFunctions.shingles(df.sparkSession, col("w"), n).as("g"))
-      .select(pack(col("id"), size(col("g")), s"$who: id/n_g").as("pk"),
-        col("grp"), explode(col("g")).as("gram"))
+        GraftFunctions.shingles(df.sparkSession,
+          TextAnalysis.tokens(col(textCol)), n).as("g"))
+      .select(col("id"), col("grp"), size(col("g")).as("ng"),
+        explode_outer(col("g")).as("gram"))
+      .where(col("gram").isNotNull)
+      .select(knownNotNull(pack(col("id"), col("ng"), s"$who: id/n_g")).as("pk"),
+        col("grp"), col("gram"))
     val gramDf = posting.groupBy("grp", "gram").agg(count(lit(1)).as("gdf"))
     val capped = maxDf.fold(gramDf)(m => gramDf.where(col("gdf") <= m))
     val w = Window.partitionBy("pk").orderBy(col("gdf").asc, col("gram").asc)

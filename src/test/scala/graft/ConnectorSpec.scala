@@ -1,11 +1,15 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
-import graft.connector.{Connection, DagTopology, EtlpApp, ProcessorDef}
+import graft.connector.{CheckResult, Connection, DagTopology, EtlpApp, EtlpSink, ProcessorDef}
 import graft.pipeline.Xf
 import graft.sinks.{CountingSink, MemorySink, ParquetSink}
-import graft.sources.{CsvSource, FnSource, ParquetSource, TextLineSource}
+import graft.sources.{CsvSource, FnSource, JsonlSource, ParquetSource, TextLineSource}
 
 class ConnectorSpec extends SparkSpec {
   import spark.implicits._
@@ -164,5 +168,92 @@ class ConnectorSpec extends SparkSpec {
     assert(fan.write(spark.range(25).toDF("n")) == 25L)
     assert(spark.read.parquet(s"$dir/a").count() == 25)
     assert(spark.read.parquet(s"$dir/b").count() == 25)
+  }
+
+  /** A sink that collects the flow and keeps the frame it ran, so a
+    * test can read the executed plan and its metrics afterwards. */
+  private final class PlanSink extends EtlpSink {
+    var ran: DataFrame = _
+    var rows: Seq[Row] = Nil
+    def spec: Map[String, String] = Map("type" -> "plan")
+    def check(s: SparkSession) = CheckResult(valid = true, "ok")
+    def write(df: DataFrame): Long = {
+      rows = df.collect().toSeq; ran = df; rows.size.toLong
+    }
+  }
+
+  private object plans extends AdaptiveSparkPlanHelper
+  private def scans(df: DataFrame) =
+    plans.collect(df.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
+  private def bag(rows: Seq[Row]) =
+    rows.groupBy(identity).view.mapValues(_.size).toMap
+
+  test("Connection.start runs an error-channel flow in one scan and one JSON parse per line") {
+    import org.apache.spark.sql.types._
+    import graft.functions.ErrorChannel
+    val dir = Files.createTempDirectory("graft-onepass-jsonl").toString
+    val lines = (0 until 40).map { i =>
+      if (i % 9 == 4) s"""{"id": $i, "amount": "n/a"}"""
+      else if (i % 13 == 6) s"""{"id": $i, "amou"""
+      else s"""{"id": $i, "amount": "${i * 1.5}"}"""
+    }
+    lines.toDF("line").coalesce(2).write.mode("overwrite").text(s"$dir/in")
+    val schema = StructType(Seq(
+      StructField("id", LongType), StructField("amount", StringType)))
+    val xf = Xf { df =>
+      val split = ErrorChannel.split(df,
+        expr("try_cast(amount AS DECIMAL(12,2))"), "amount_dec",
+        ok = Seq(col("id")), timestampMs = col("id"), sourceStream = "jsonl",
+        errJson = to_json(struct(col("id"), col("amount"), col("file"))))
+      split.ok.select(lit("record").as("channel"), col("id"),
+          col("amount_dec").cast("string").as("body"))
+        .unionByName(split.errors.select(lit("error").as("channel"),
+          lit(null).cast("long").as("id"), col("envelope").as("body")))
+    }
+    val src = JsonlSource(s"$dir/in", Some(schema))
+    val sink = new PlanSink
+    assert(Connection(src, xf, sink).start(spark) == lines.size)
+    val plan = sink.ran.queryExecution.executedPlan
+    val fileScans = scans(sink.ran)
+    assert(fileScans.size == 1, plan)
+    assert(fileScans.head.metrics("numOutputRows").value == lines.size, plan)
+    def parses(df: DataFrame) = plans.flatMap(df.queryExecution.executedPlan)(
+      _.expressions.flatMap(_.collect { case j: JsonToStructs => j })).size
+    assert(parses(sink.ran) == 1, plan)
+    // the same flow outside a Connection: one scan per branch
+    val plain = xf(src.read(spark))
+    val plainRows = plain.collect().toSeq
+    assert(scans(plain).size == 2)
+    info(s"from_json calls: ${parses(plain)} unfused, 1 fused")
+    assert(bag(sink.rows) == bag(plainRows))
+    assert(sink.rows.count(_.getString(0) == "error") ==
+      lines.indices.count(i => i % 9 == 4 || i % 13 == 6))
+  }
+
+  test("Connection.start reads a diamond DagTopology's source once") {
+    val dir = Files.createTempDirectory("graft-onepass-dag").toString
+    spark.range(50).selectExpr("id AS n", "id % 7 AS m").coalesce(2)
+      .write.mode("overwrite").parquet(s"$dir/in")
+    val xf = Xf { df =>
+      DagTopology.empty.withSource("src", df)
+        .withXform("odd", Xf.filter(col("m") % 2 === 1) >>
+          Xf.map(col("n"), (col("m") * 10).as("v")))
+        .withXform("low", Xf.filter(col("n") < 20) >>
+          Xf.map(col("n"), col("m").as("v")))
+        .withXform("merged", Xf(identity))
+        .withWorkflow("src" -> "odd", "src" -> "low",
+          "odd" -> "merged", "low" -> "merged")
+        .output("merged")
+    }
+    val src = ParquetSource(s"$dir/in")
+    val sink = new PlanSink
+    Connection(src, xf, sink).start(spark)
+    val fileScans = scans(sink.ran)
+    assert(fileScans.size == 1, sink.ran.queryExecution.executedPlan)
+    assert(fileScans.head.metrics("numOutputRows").value == 50)
+    val plain = xf(src.read(spark))
+    assert(scans(plain).size == 2)
+    assert(bag(sink.rows) == bag(plain.collect().toSeq))
+    assert(sink.rows.size == (0 until 50).count(n => n % 7 % 2 == 1) + 20)
   }
 }

@@ -993,6 +993,32 @@ class DedupSpec extends SparkSpec {
       s"$dfFilters rows out of the df filters, $kept postings with df >= 2")
   }
 
+  test("prefix core: no optimized Filter calls the shingle kernel") {
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    import graft.plans.{GraftFunctions, NativeFn}
+    // range-backed, so the kernels stay in the plan; docs 0 and 1 hold
+    // fewer than 3 tokens and must drop out without a size filter
+    val docs = spark.range(40L).selectExpr("id AS doc_id", "'en' AS lang",
+      "CASE WHEN id < 2 THEN 'w' || id ELSE concat_ws(' ', 'w' || (id % 3), " +
+        "'w' || (id % 2), 'w' || (id % 5), 'x') END AS text")
+    val forms = Seq(
+      Dedup.ngramJaccardPairsPrefix(docs, "doc_id", "text", "lang", 3, 0.5),
+      Dedup.ngramContainmentPairsPrefix(docs, "doc_id", "text", "lang", 3, 0.5,
+        maxDf = Some(8L)))
+    for (pairs <- forms) {
+      val plan = pairs.queryExecution.optimizedPlan
+      val calls = plan.collect { case f: Filter if f.condition.exists {
+        case n: NativeFn => n.name == GraftFunctions.ShinglesName
+        case _ => false
+      } => f.condition }
+      assert(calls.isEmpty, plan)
+      assert(!pairs.collect().exists(r => r.getLong(0) < 2 || r.getLong(1) < 2))
+    }
+    val plain = Dedup.ngramJaccardPairs(docs, "doc_id", "text", "lang", 3, 0.5)
+      .collect().toSet
+    assert(plain.nonEmpty && plain == forms.head.collect().toSet)
+  }
+
   test("plain forms: the df guard passes df = dfBudget and raises at dfBudget + 1; an all-unique corpus gives no pairs") {
     def docs(texts: String*) =
       texts.zipWithIndex.map { case (t, i) => (i.toLong, t, "en") }
