@@ -3,7 +3,9 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType,
+  IntegerType, ShortType, StructType}
+import graft.plans.ParamLiteral
 
 /** Manifest-based ATOMIC multi-partition table commit — the lakehouse
   * primitive the ETL family's directory writers (partition overwrite,
@@ -2062,15 +2064,15 @@ object Txn {
     require(lo <= hi, s"commitDeleteWhere: empty range [$lo, $hi]")
     var attempt = 0
     var baseV = -1
-    val c = col(statsCol).try_cast("double")
     while (attempt < maxRetries) {
       val v = currentVersion(spark, root) + 1
       require(v >= 2, s"Txn.commitDeleteWhere: no committed version at $root")
       val prev = headMetaLines(spark, root, v - 1)
       if (baseV < 0) baseV = v - 1
       else if (v - 1 > baseV) {
-        val hit = readChangesCdf(spark, root, baseV, Some(v - 1))
-          .where(c >= lo && c <= hi).limit(1).count()
+        val cdf = readChangesCdf(spark, root, baseV, Some(v - 1))
+        val (c, l, h) = rangeTerms(cdf, statsCol, lo, hi)
+        val hit = cdf.where(c >= l && c <= h).limit(1).count()
         if (hit > 0) throw new ConcurrentWriteException(
           s"Txn.commitDeleteWhere at $root: concurrent commit(s) " +
             s"v${baseV + 1}..v${v - 1} changed rows inside " +
@@ -2093,10 +2095,11 @@ object Txn {
       val staged =
         if (boundary.isEmpty) Nil
         else {
-          val survivors = readMasked(spark, root, boundary.sorted,
+          val rows = readMasked(spark, root, boundary.sorted,
               dvByPath(snapshotLines(spark, root, v - 1)
                 .filterNot(isMeta)), schemaLine(prev), colmapOf(prev))
-            .where(c.isNull || c < lo || c > hi)
+          val (c, l, h) = rangeTerms(rows, statsCol, lo, hi)
+          val survivors = rows.where(c.isNull || c < l || c > h)
           stageBatch(spark, root, survivors, partitionBy, batchDir(v),
             (statsCol +: statsCols).distinct, bloomCols,
             colmap = colmapOf(prev))
@@ -2460,7 +2463,8 @@ object Txn {
     // survives when it records no usable range for the column (a NaN
     // bound — legacy manifests — means "cannot skip", the same
     // no-stats fallback as touchedFiles; a legacy UNNAMED range
-    // answers any column) or the range overlaps [lo, hi]
+    // answers any column) or the range overlaps [lo, hi]; the bounds
+    // are parameters (map-valued stats never reach a pushed filter)
     val cm = colmapOf(rawLines(spark, root, v))
     resolveEntries(spark, root, v) match {
       case Left(entries) =>
@@ -2475,7 +2479,8 @@ object Txn {
           val c = physName(cm, c0) // stats keys are physical
           val st = coalesce(col("nstats")(c), col("nstats")(""))
           st.isNull || isnan(st("lo")) || isnan(st("hi")) ||
-            (st("hi") >= lit(lo) && st("lo") <= lit(hi))
+            (st("hi") >= ParamLiteral.column(lo) &&
+              st("lo") <= ParamLiteral.column(hi))
         }.reduce(_ && _)
         df.where(cond)
           .select("path").collect().map(_.getString(0)).toSeq.sorted
@@ -2506,7 +2511,8 @@ object Txn {
         val keep = size(map_keys(col("nstats"))) =!= 1 ||
           exists(map_values(col("nstats")), st =>
             isnan(st("lo")) || isnan(st("hi")) ||
-              (st("hi") >= lit(lo) && st("lo") <= lit(hi)))
+              (st("hi") >= ParamLiteral.column(lo) &&
+                st("lo") <= ParamLiteral.column(hi)))
         df.where(keep)
           .select("path").collect().map(_.getString(0)).toSeq.sorted
     }
@@ -2520,7 +2526,13 @@ object Txn {
     * manifest (driver metadata) and the files in the INTERSECTION of
     * both ranges, not the union either column would open alone. The
     * residual predicates still apply, so the result is exactly the
-    * filtered snapshot regardless of how files overlap. */
+    * filtered snapshot regardless of how files overlap.
+    *
+    * The residual's bounds are bound as parameters ([[rangeTerms]]):
+    * reads that differ only in their bounds share one compiled class
+    * per read shape, so every read after the first is a codegen-cache
+    * hit. A bound stays a literal only where Parquet receives the
+    * comparison as a pushed filter. */
   def readWhereAll(spark: SparkSession, root: String,
       preds: Seq[(String, Double, Double)],
       version: Option[Int] = None): DataFrame = {
@@ -2535,8 +2547,25 @@ object Txn {
         dvByPath(lines.filterNot(isMeta)), schemaLine(lines),
         colmapOf(lines))
     preds.foldLeft(base) { case (df, (c, lo, hi)) =>
-      df.where(col(c).try_cast("double") >= lo && col(c).try_cast("double") <= hi)
+      val (x, l, h) = rangeTerms(df, c, lo, hi)
+      df.where(x >= l && x <= h)
     }
+  }
+
+  /** `try_cast(c AS DOUBLE)` over `df`, and the range bounds `lo`, `hi`
+    * as Columns. A bound is a [[ParamLiteral]], so the generated code
+    * does not change with it; it stays a literal on a column whose
+    * comparison Parquet receives as a pushed filter: a double column
+    * compares without the cast, and `UnwrapCastInBinaryComparison`
+    * drops the cast of a byte, short, int or float column, but only
+    * against a literal. */
+  private def rangeTerms(df: DataFrame, c: String, lo: Double,
+      hi: Double): (Column, Column, Column) = {
+    val bound: Double => Column = df.select(col(c)).schema.head.dataType match {
+      case ByteType | ShortType | IntegerType | FloatType | DoubleType => lit(_)
+      case _ => ParamLiteral.column(_)
+    }
+    (col(c).try_cast("double"), bound(lo), bound(hi))
   }
 
   /** Single-column [[readWhereAll]]: `statsCol BETWEEN lo AND hi`. */

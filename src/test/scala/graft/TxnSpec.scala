@@ -2160,4 +2160,53 @@ class TxnSpec extends SparkSpec {
       Bloom.mightContain(buf, UTF8String.fromString(s"u-$i"), 7))
     assert(fp < 1000, s"false-positive rate degenerate: $fp / 10000")
   }
+
+  test("readWhere: new bounds reuse the compiled read; rows equal a literal filter") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    def reference(root: String, c: String, lo: Double, hi: Double) = {
+      val x = col(c).try_cast("double")
+      rows(Txn.read(spark, root).where(x >= lit(lo) && x <= lit(hi)))
+    }
+    // a bigint key with a NULL key, DV-masked rows and a renamed
+    // (column-mapped) key, past a parquet checkpoint, so the prune
+    // runs as a Spark job too
+    val root = freshRoot()
+    Txn.commitOverwrite(spark, root,
+      spark.range(400).select(when(col("id") =!= 13, col("id")).as("k"),
+        (col("id") % 7).as("v")).repartitionByRange(4, col("id")),
+      statsCol = Some("k"))
+    (1 to Txn.checkpointEvery).foreach { i =>
+      Txn.commitAppend(spark, root,
+        spark.range(400 + 10 * i, 410 + 10 * i).coalesce(1)
+          .select(col("id").as("k"), (col("id") % 7).as("v")),
+        statsCol = Some("k"))
+    }
+    val masked = Seq(20L, 21L, 300L, 455L)
+    Txn.commitDeleteDv(spark, root, masked.toDF("k"), "k")
+    Txn.renameColumn(spark, root, "k", "key")
+    assert(fs(root).listStatus(new Path(s"$root/_manifests"))
+      .exists(_.getPath.getName.endsWith(".cpq")), "no parquet checkpoint rolled")
+    // both ranges keep every file, so both reads plan the same shape
+    val first = rows(Txn.readWhere(spark, root, "key", 5d, 590d))
+    val c0 = compiles
+    val second = rows(Txn.readWhere(spark, root, "key", 9d, 580d))
+    assert(compiles == c0, s"a read with new bounds compiled ${compiles - c0} classes")
+    assert(first == reference(root, "key", 5d, 590d))
+    assert(second == reference(root, "key", 9d, 580d))
+    assert(second.size == 390 + 160 - masked.size) // 9..399 but 13; 410..569
+    // a double column's bounds stay literals, which Parquet receives;
+    // the file whose NaN keeps it from recording a range is read
+    val root2 = freshRoot()
+    Txn.commitOverwrite(spark, root2, Seq(Double.NaN, 5.0, 7.5).toDF("x")
+      .coalesce(1), statsCol = Some("x"))
+    Txn.commitAppend(spark, root2, Seq(1.0, 50.0).toDF("x").coalesce(1),
+      statsCol = Some("x"))
+    for ((lo, hi) <- Seq((4d, 6d), (0d, 100d), (6d, 1d / 0d)))
+      assert(rows(Txn.readWhere(spark, root2, "x", lo, hi)) ==
+        reference(root2, "x", lo, hi), s"[$lo, $hi]")
+    assert(Txn.readWhere(spark, root2, "x", 4d, 6d).queryExecution
+      .executedPlan.toString.contains("GreaterThanOrEqual(x,4.0)"))
+  }
 }

@@ -18,9 +18,11 @@ expression is left alone). RDD ids `RDD[1054]` become `RDD[]` (they
 count the RDDs made before), source positions such as `at Dedup.scala:938`
 in checkpoint RDD names become `Dedup.scala:n` (they move with any edit
 above that line), UUIDs become `<uuid>`, object hashes
-`Foo@1a2b3c` become `Foo@<hex>`, and 8-character hex words with at least
-one letter a-f (fresh file names) become `<hex>`, so that a decimal
-literal such as 10000000 is kept. The tree drawing in front of an
+`Foo@1a2b3c` become `Foo@<hex>`, a Txn batch name's 8-character hex
+word becomes `<hex>` even when it holds only digits (`b00001-43386561`
+becomes `b00001-<hex>`), and any other 8-character hex word with at
+least one letter a-f (fresh file names) becomes `<hex>`, so that a
+decimal literal such as 10000000 is kept. The tree drawing in front of an
 operator is stripped. Non-blank lines are then counted per key as a
 multiset. A line whose count differs between the two parent runs is
 noise (run order, JVM or fresh file names moved it). Any other line
@@ -45,6 +47,7 @@ SUBS = [
     (re.compile(r"\.scala:\d+"), ".scala:n"),
     (re.compile(r"\b[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}\b"), "<uuid>"),
     (re.compile(r"(\w)@[0-9a-f]+\b"), r"\1@<hex>"),
+    (re.compile(r"\b(b\d{5})-[0-9a-f]{8}\b"), r"\1-<hex>"),
     (re.compile(r"\b(?=[0-9]*[a-f])[0-9a-f]{8}\b"), "<hex>"),
 ]
 TREE = re.compile(r"^[\s:+\-]*")
